@@ -409,19 +409,25 @@ def _extras(spark) -> dict:
     # first-batch Python worker spin-up? tail batch?) instead of
     # moving one blended total. Additive: the timed body is unchanged.
     cep_batches: list = []
+    cep_ids: set = set()
     try:
         from pyspark.sql.streaming import StreamingQueryListener
 
         class _CepListener(StreamingQueryListener):
+            # Other streams' batchIds also start at 0: keep only the
+            # progress of the cep_streaming_funnel query (its replay
+            # gate names it tsdp_cep_<hex>).
             def onQueryStarted(self, event):
-                pass
+                if (event.name or "").startswith("tsdp_cep_"):
+                    cep_ids.add(str(event.id))
 
             def onQueryProgress(self, event):
                 try:
                     p = event.progress
-                    cep_batches.append(
-                        (p.batchId, p.durationMs.get("triggerExecution"))
-                    )
+                    if str(p.id) in cep_ids:
+                        cep_batches.append(
+                            (p.batchId, p.durationMs.get("triggerExecution"))
+                        )
                 except Exception:
                     pass
 

@@ -135,7 +135,26 @@ _SLOW_NODEIDS = {
 }
 
 
+def _named_nodeids(config) -> set[str]:
+    """Node ids named on the command line (``path::name`` arguments),
+    made relative to the rootdir as ``item.nodeid`` is."""
+    named = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            path = os.path.relpath(
+                os.path.join(config.invocation_params.dir, path), config.rootpath
+            )
+            named.add(path.replace(os.sep, "/") + "::" + rest)
+    return named
+
+
 def pytest_collection_modifyitems(config, items):
+    # A slow test named explicitly (or its parametrized function) runs
+    # without `-m`; the default run's deselection is unchanged.
+    named = _named_nodeids(config)
     for item in items:
-        if item.nodeid in _SLOW_NODEIDS:
+        if item.nodeid in _SLOW_NODEIDS and not (
+            item.nodeid in named or item.nodeid.partition("[")[0] in named
+        ):
             item.add_marker(pytest.mark.slow)

@@ -5,11 +5,14 @@ getAllDataSnippetsRequest.ts contracts)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ts_data_pipeline_spark.operators import catalog as cat
 from ts_data_pipeline_spark.plans import snippets as snip
-from ts_data_pipeline_spark.plans.queryspec import TagFilter, tag_values
+from ts_data_pipeline_spark.plans.queryspec import (
+    NumericAggregation, QuerySpec, TagFilter, evaluate, oracle_sql, tag_values,
+)
 
 
 def _toy_catalog(spark):
@@ -128,6 +131,30 @@ def test_tag_values_filters_and_counts(spark):
     assert [(r.tag_value, r.n_rows, r.n_streams) for r in got] == [
         ("a", 2, 2), ("b", 1, 1)
     ]
+
+
+@pytest.mark.parametrize("op", ["Like", "NotLike"])
+def test_like_tag_filter_rejects_value_list(spark, op):
+    """LIKE takes one pattern: a value list fails at build time with
+    the operator named, on the batched-SQL path (whitelist-safe
+    values), the Column fallback (a value outside the whitelist),
+    tag_values and the oracle SQL alike."""
+    pv = spark.createDataFrame(
+        [("1", "2024-01-01 00:00:00", "purchase", 1.0, {"k": "a"})],
+        "stream_id string, ts_s string, parameter_id string, "
+        "num_value double, tags map<string,string>",
+    ).withColumn("ts", F.col("ts_s").cast("timestamp"))
+    for values in (["a%", "b%"], ["a'%", "b%"]):
+        spec = QuerySpec(
+            numeric_aggregations=[NumericAggregation("purchase", "Sum")],
+            tag_filters=[TagFilter("k", op, values)],
+        )
+        with pytest.raises(ValueError, match=op):
+            evaluate(pv, spec)
+        with pytest.raises(ValueError, match=op):
+            tag_values(pv, "k", tag_filters=spec.tag_filters)
+        with pytest.raises(ValueError, match=op):
+            oracle_sql(spec, "pv")
 
 
 def test_snippet_listing_filters(spark):

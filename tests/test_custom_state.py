@@ -178,6 +178,11 @@ def test_progress_monitor_collects_batch_metrics(spark, tmp_path):
         assert s["total_rows"] >= 2
         assert s["n_batches"] >= 2
         assert s["avg_batch_ms"] is None or s["avg_batch_ms"] > 0
+        # The state operator's width is the session's shuffle
+        # partitions, and every batch commits its state store.
+        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert all(m.state_partitions == width for m in mon.state.metrics)
+        assert all(m.state_commit_ms >= 0 for m in mon.state.metrics)
     finally:
         spark.streams.removeListener(mon)
 

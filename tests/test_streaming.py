@@ -1587,3 +1587,71 @@ def test_upsert_sink_full_lifecycle_over_file_uri(spark, tmp_path):
     }
     assert got == {(f"k{i}", float(i) + 0.5) for i in range(16)}
     assert not fsio.exists(spark, ptr)  # the reader never writes
+
+
+def test_state_store_partitions_follow_executor_slots(spark, tmp_path, monkeypatch):
+    """get_spark sizes shuffle partitions to the executor slots
+    (sparkContext.defaultParallelism) unless
+    SPARK_GRAFT_SHUFFLE_PARTITIONS overrides it, and a stateful stream
+    started on the session runs that many state-store partitions."""
+    from ts_data_pipeline_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    slots = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get(key)
+    try:
+        monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
+        assert get_spark() is spark
+        assert spark.conf.get(key) == str(slots)
+
+        data_dir = str(tmp_path / "data")
+        _write_chunk(spark, [_trade("A", "2024-01-01 10:00:10")], data_dir)
+        stream = windowed.parquet_stream(spark, data_dir, TRADE_SCHEMA, max_files=1)
+        agg = windowed.streaming_option_window_agg(stream)
+        q = windowed.run_available_now(agg, "t_state_slots", str(tmp_path / "ckpt"))
+        state_op = q.recentProgress[-1]["stateOperators"][0]
+        assert state_op["numShufflePartitions"] == slots
+
+        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "3")
+        get_spark()
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_replay_gate_sizes_state_to_slots_under_caller_width(spark, tmp_path):
+    """A replay gate under a session carrying its own width (a caller's
+    vanilla session keeps Spark's default of 200) runs its state store
+    at the executor slots and hands the caller's width back."""
+    import time
+
+    from ts_data_pipeline_spark.queries.streaming import _run_replay_gate
+    from ts_data_pipeline_spark.streaming.monitor import ProgressMonitor
+
+    key = "spark.sql.shuffle.partitions"
+    slots = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get(key)
+    caller_width = str(slots + 3)
+    mon = ProgressMonitor()
+    spark.streams.addListener(mon)
+    try:
+        spark.conf.set(key, caller_width)
+        df = spark.createDataFrame(
+            [_trade("A", "2024-01-01 10:00:10"), _trade("A", "2024-01-01 10:05:00")],
+            TRADE_SCHEMA,
+        )
+        finals = _run_replay_gate(
+            spark, df, "t_gate_slots_", windowed.streaming_option_window_agg, n_chunks=2
+        )
+        assert spark.conf.get(key) == caller_width
+        assert finals.count() == 1  # the 10:00 window closes; 10:05 stays open
+        # Listener delivery is async; progress arrives shortly after.
+        for _ in range(40):
+            if len(mon.state.metrics) >= 2:
+                break
+            time.sleep(0.25)
+        assert mon.state.metrics
+        assert all(m.state_partitions == slots for m in mon.state.metrics)
+    finally:
+        spark.streams.removeListener(mon)
+        spark.conf.set(key, prev)

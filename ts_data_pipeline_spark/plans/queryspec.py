@@ -308,9 +308,9 @@ def _tag_predicate_sql_spark(f: TagFilter, tag_sql: str) -> Optional[str]:
             )
         return f"NOT ({tag_sql} = '{f.value}')"
     if f.operator == "Like":
-        return f"{tag_sql} LIKE '{f.value}'"
+        return f"{tag_sql} LIKE '{_like_pattern(f)}'"
     if f.operator == "NotLike":
-        return f"NOT ({tag_sql} LIKE '{f.value}')"
+        return f"NOT ({tag_sql} LIKE '{_like_pattern(f)}')"
     raise ValueError(f"unsupported tag operator {f.operator!r}")
 
 
@@ -349,6 +349,18 @@ def _filters_sql(
     return " AND ".join(parts)
 
 
+def _like_pattern(f: TagFilter) -> str:
+    """The one pattern a Like/NotLike filter matches. A value list has
+    no LIKE meaning (the SQL path would interpolate its repr, the
+    Column path would match nothing), so it is rejected."""
+    if isinstance(f.value, (list, tuple)):
+        raise ValueError(
+            f"tag operator {f.operator!r} takes one pattern, "
+            f"not a list: {list(f.value)!r}"
+        )
+    return str(f.value)
+
+
 def _tag_predicate(f: TagFilter, tag_value: Column) -> Column:
     if f.operator == "Equal":
         if isinstance(f.value, (list, tuple)):
@@ -359,9 +371,9 @@ def _tag_predicate(f: TagFilter, tag_value: Column) -> Column:
             return ~tag_value.isin(*f.value)
         return tag_value != f.value
     if f.operator == "Like":
-        return tag_value.like(str(f.value))
+        return tag_value.like(_like_pattern(f))
     if f.operator == "NotLike":
-        return ~tag_value.like(str(f.value))
+        return ~tag_value.like(_like_pattern(f))
     raise ValueError(f"unsupported tag operator {f.operator!r}")
 
 
@@ -981,9 +993,9 @@ def _tag_predicate_sql(f: TagFilter, col: str) -> str:
             return f"{col} NOT IN ({', '.join(_sql_lit(v) for v in f.value)})"
         return f"{col} != {_sql_lit(f.value)}"
     if f.operator == "Like":
-        return f"{col} LIKE {_sql_lit(f.value)}"
+        return f"{col} LIKE {_sql_lit(_like_pattern(f))}"
     if f.operator == "NotLike":
-        return f"{col} NOT LIKE {_sql_lit(f.value)}"
+        return f"{col} NOT LIKE {_sql_lit(_like_pattern(f))}"
     raise ValueError(f"unsupported tag operator {f.operator!r}")
 
 

@@ -21,7 +21,6 @@ cutoff predicate. Reference semantics being pinned: the reference's
 
 from __future__ import annotations
 
-import contextlib
 import os
 import shutil
 import tempfile
@@ -34,6 +33,7 @@ from pyspark.sql import types as T
 from ts_data_pipeline_spark import io
 from ts_data_pipeline_spark.operators import trades
 from ts_data_pipeline_spark.registry import register
+from ts_data_pipeline_spark.session import shuffle_partitions
 from ts_data_pipeline_spark.streaming import kafka_io, windowed
 
 TRADE_VALUE_SCHEMA = T.StructType(
@@ -152,28 +152,6 @@ FROM events
 """
 
 
-@contextlib.contextmanager
-def _scoped_conf(spark: SparkSession, key: str, value: str):
-    """Set a session conf for the duration of a run, then restore.
-
-    The streaming queries here need a machine-sized state shuffle;
-    leaking that conf into the shared session would silently change
-    the plans of later queries/benchmarks (ADVICE r01).
-    """
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 def _replay_chunks(
     df: DataFrame, prefix: str, n_chunks: int = 4
 ) -> tuple[str, str]:
@@ -215,8 +193,17 @@ def _run_replay_gate(
     stream = windowed.parquet_stream(spark, data_dir, df.schema, max_files=1)
     out = build(stream)
     name = f"{prefix}{uuid.uuid4().hex[:8]}"
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "32"):
+    # The state store takes its width from the session at the first
+    # micro-batch. A caller's own session may carry Spark's default of
+    # 200, so size it to the executor slots for this run and restore
+    # the caller's value after, leaving their later plans unchanged.
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, shuffle_partitions(spark))
+    try:
         windowed.run_available_now(out, name, os.path.join(base, "ckpt"))
+    finally:
+        spark.conf.set(key, prev)
     shutil.rmtree(base, ignore_errors=True)
     return spark.table(name)
 
@@ -227,10 +214,6 @@ def streaming_window_finals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Replays the events table as 4 time-ordered micro-batches through
     the watermarked window agg and returns the append-mode finals.
     """
-    # Stateful micro-batches at 200 default shuffle partitions spend
-    # more time on task dispatch than work at this SF; size the state
-    # shuffle to the machine (a cluster deployment would set this in
-    # the session or rely on AQE, which streaming disables).
     enriched = trades.events_as_option_trades(io.load(spark, sf_dir, "events"))
     return _run_replay_gate(
         spark, enriched, "tsdp_stream_",

@@ -10,8 +10,19 @@ cluster at ~100 TB:
 - session timezone pinned to UTC so event-time semantics are
   deployment-independent (the reference pins US/Eastern only at the
   presentation edge, darkpool_trades/main.py:45),
-- shuffle partitions sized via env so the same code runs at
-  sf0.001 locally and at cluster scale unchanged.
+- shuffle partitions sized to the executor slots
+  (:func:`shuffle_partitions`): ``spark.sql.shuffle.partitions`` is
+  set to ``sparkContext.defaultParallelism`` (what ``local[*]``
+  resolves to) unless ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` overrides
+  it. Batch shuffles still coalesce under AQE; stateful streams, which
+  AQE leaves alone, fix the value into their checkpoint, so each new
+  stream runs one state-store task per slot instead of waves of
+  near-empty ones. The rule holds in local mode and on clusters whose
+  executors are all registered when the session starts. Under dynamic
+  allocation, or while executors are still starting,
+  ``defaultParallelism`` counts only the cores registered so far
+  (never fewer than 2), and AQE cannot split partitions back up, so
+  there ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` must be set.
 """
 
 from __future__ import annotations
@@ -24,11 +35,9 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "ts-data-pipeline-spark") -> SparkSession:
     """Build (or reuse) the engine's SparkSession."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    shuffle_partitions = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", shuffle_partitions)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -51,4 +60,14 @@ def get_spark(app_name: str = "ts-data-pipeline-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions(spark))
+    return spark
+
+
+def shuffle_partitions(spark: SparkSession) -> str:
+    """The engine's shuffle width: ``SPARK_GRAFT_SHUFFLE_PARTITIONS``
+    if set, else the executor slots (``defaultParallelism``)."""
+    return os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or str(
+        spark.sparkContext.defaultParallelism
+    )

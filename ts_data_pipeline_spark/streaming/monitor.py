@@ -27,6 +27,10 @@ class BatchMetric:
     process_ms: Optional[float]
     watermark: Optional[str]
     state_rows: Optional[int]
+    # First state operator's shuffle width and commit time: a change
+    # in partition sizing shows here without re-profiling.
+    state_partitions: Optional[int]
+    state_commit_ms: Optional[int]
 
 
 @dataclass
@@ -51,13 +55,15 @@ class ProgressMonitor(StreamingQueryListener):
 
     def onQueryProgress(self, event):
         p = event.progress
-        state_ops = p.stateOperators
+        op = p.stateOperators[0] if p.stateOperators else None
         m = BatchMetric(
             batch_id=p.batchId,
             num_input_rows=p.numInputRows,
             process_ms=(p.durationMs or {}).get("triggerExecution"),
             watermark=(p.eventTime or {}).get("watermark"),
-            state_rows=state_ops[0].numRowsTotal if state_ops else None,
+            state_rows=op.numRowsTotal if op else None,
+            state_partitions=op.numShufflePartitions if op else None,
+            state_commit_ms=op.commitTimeMs if op else None,
         )
         self.state.metrics.append(m)
         if m.num_input_rows == 0:
