@@ -11,7 +11,8 @@ from pyspark.sql import functions as F
 from ts_data_pipeline_spark.operators import catalog as cat
 from ts_data_pipeline_spark.plans import snippets as snip
 from ts_data_pipeline_spark.plans.queryspec import (
-    NumericAggregation, QuerySpec, TagFilter, evaluate, oracle_sql, tag_values,
+    EventQuerySpec, NumericAggregation, QuerySpec, TagFilter, evaluate,
+    evaluate_events, oracle_sql, tag_values,
 )
 
 
@@ -136,9 +137,8 @@ def test_tag_values_filters_and_counts(spark):
 @pytest.mark.parametrize("op", ["Like", "NotLike"])
 def test_like_tag_filter_rejects_value_list(spark, op):
     """LIKE takes one pattern: a value list fails at build time with
-    the operator named, on the batched-SQL path (whitelist-safe
-    values), the Column fallback (a value outside the whitelist),
-    tag_values and the oracle SQL alike."""
+    the operator named, in evaluate, tag_values and the oracle SQL
+    alike, whatever characters the values hold."""
     pv = spark.createDataFrame(
         [("1", "2024-01-01 00:00:00", "purchase", 1.0, {"k": "a"})],
         "stream_id string, ts_s string, parameter_id string, "
@@ -156,6 +156,42 @@ def test_like_tag_filter_rejects_value_list(spark, op):
         with pytest.raises(ValueError, match=op):
             oracle_sql(spec, "pv")
 
+
+
+def test_empty_value_lists_rejected_by_name(spark):
+    """An empty value list has no SQL spelling (``IN ()`` is a parse
+    error in Spark and DuckDB): every entry point rejects it with a
+    ValueError naming the field, on the Spark and the oracle path."""
+    pv = spark.createDataFrame(
+        [("1", "2024-01-01 00:00:00", "purchase", 1.0, {"k": "a"})],
+        "stream_id string, ts_s string, parameter_id string, "
+        "num_value double, tags map<string,string>",
+    ).withColumn("ts", F.col("ts_s").cast("timestamp"))
+    aggs = [NumericAggregation("purchase", "Sum")]
+    cases = [
+        (QuerySpec(numeric_aggregations=aggs, stream_ids=[]), "stream_ids"),
+    ] + [
+        (QuerySpec(numeric_aggregations=aggs,
+                   tag_filters=[TagFilter("k", op, [])]), op)
+        for op in ("Equal", "NotEqual")
+    ]
+    for spec, field in cases:
+        with pytest.raises(ValueError, match=field):
+            evaluate(pv, spec)
+        with pytest.raises(ValueError, match=field):
+            tag_values(pv, "k", stream_ids=spec.stream_ids,
+                       tag_filters=spec.tag_filters)
+        with pytest.raises(ValueError, match=field):
+            oracle_sql(spec, "pv")
+    ev = spark.createDataFrame(
+        [("1", "2024-01-01 00:00:00", "e", "Error", "v", {"k": "a"})],
+        "stream_id string, ts_s string, event_id string, level string, "
+        "value string, tags map<string,string>",
+    ).withColumn("ts", F.col("ts_s").cast("timestamp"))
+    for field in ("stream_ids", "event_ids", "include_levels",
+                  "exclude_levels"):
+        with pytest.raises(ValueError, match=field):
+            evaluate_events(ev, EventQuerySpec(**{field: []}))
 
 def test_snippet_listing_filters(spark):
     c = snip.snippets_catalog(spark)

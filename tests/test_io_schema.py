@@ -88,3 +88,16 @@ def test_schema_memo_roundtrip(spark):
     second = io.load(spark, SF_DIR, "events")         # memoized path
     assert first.schema == second.schema
     assert first.count() == second.count()
+
+
+def test_load_reasserts_reader_confs(spark):
+    """A conf a caller changes between loads is set back by the next
+    load: the reader settings are not remembered per session."""
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    io.load(spark, SF_DIR, "events")
+    try:
+        spark.conf.set(key, "true")
+        io.load(spark, SF_DIR, "events")
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, "false")

@@ -249,7 +249,15 @@ def test_queryspec_differential_fuzz(spark, oracle):
     lands on the opposite side (the BENCH_NOTES rounded-division tie
     class). Forgiven iff the two values are ADJACENT 4-dp grid points
     whose midpoint is a half-tie; anything else — wrong rows, NULL
-    structure, >1e-4 drift, non-tie 1e-4 drift — still fails."""
+    structure, >1e-4 drift, non-tie 1e-4 drift — still fails.
+
+    Parameter ids are drawn from the data's parameters and from exotic
+    names absent from it (both engines return all-NULL or zero-count
+    columns under quoted aliases); Equal/NotEqual value lists mix the
+    data's tag values with quote, backtick, backslash, %, _ and
+    non-ASCII values. Like patterns keep the data's own alphabet: a
+    ``\\`` there is a LIKE escape in Spark and a plain character in
+    DuckDB, a dialect difference rather than a bug."""
     import numpy as np
     import pandas as pd
 
@@ -258,6 +266,9 @@ def test_queryspec_differential_fuzz(spark, oracle):
     from ts_data_pipeline_spark.queries.telemetry import PV_SQL, _pv
 
     params = ["view", "click", "purchase", "signup", "error"]
+    exotic = ["it's", 'dq"x', "we`ird", "a.b", "back\\slash", "pct%_x",
+              "tempé"]
+    param = st.one_of(st.sampled_from(params), st.sampled_from(exotic))
     num_aggs = ["Mean", "Max", "Min", "First", "Last", "Sum", "Count",
                 "Median", "Spread", "CountDistinct", "P90", "P99"]
     str_aggs = ["First", "Last", "Count"]
@@ -271,7 +282,8 @@ def test_queryspec_differential_fuzz(spark, oracle):
             lambda p: (f"2024-01-{p[0]:02d} 00:00:00",
                        f"2024-01-{p[1]:02d} 00:00:00")
         )
-        tagval = st.integers(0, 99).map(str)
+        tagval = st.one_of(st.integers(0, 99).map(str),
+                           st.sampled_from(exotic))
         tag_filter = st.one_of(
             st.tuples(st.sampled_from(["Equal", "NotEqual"]), tagval)
             .map(lambda t: qs.TagFilter("k", t[0], t[1])),
@@ -283,11 +295,11 @@ def test_queryspec_differential_fuzz(spark, oracle):
             .map(lambda t: qs.TagFilter("k", t[0], t[1])),
         )
         naggs = st.lists(
-            st.tuples(st.sampled_from(params), st.sampled_from(num_aggs)),
+            st.tuples(param, st.sampled_from(num_aggs)),
             min_size=1, max_size=4, unique=True,
         ).map(lambda l: [qs.NumericAggregation(p, a) for p, a in l])
         saggs = st.lists(
-            st.tuples(st.sampled_from(params), st.sampled_from(str_aggs)),
+            st.tuples(param, st.sampled_from(str_aggs)),
             min_size=0, max_size=2, unique=True,
         ).map(lambda l: [qs.StringAggregation(p, a) for p, a in l])
         streams = st.one_of(
@@ -336,8 +348,7 @@ def test_queryspec_differential_fuzz(spark, oracle):
     # raw passthrough specs ('None' aggregation, no bucketing)
     def raw_strategy():
         return st.tuples(
-            st.lists(st.sampled_from(params), min_size=1, max_size=3,
-                     unique=True),
+            st.lists(param, min_size=1, max_size=3, unique=True),
             st.booleans(),
             st.integers(1, 29),
         ).map(lambda t: qs.QuerySpec(

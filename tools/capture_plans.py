@@ -1,9 +1,11 @@
 """Capture .explain("formatted") for the 11 headline queries.
 
 Usage: python tools/capture_plans.py <suffix> [query ...]
-Writes plans/r15/<query>_<suffix>.txt for each headline query (or the
-named subset). Plans are captured on the bench session (session.py
-configs) at $SPARK_GRAFT_SF_DIR — the same shape bench.py times.
+Writes <dir>/<query>_<suffix>.txt for each headline query (or the
+named subset; any registered query name works), where <dir> is
+$SPARK_GRAFT_PLANS_DIR if set, else plans/r16/. Plans are captured on
+the bench session (session.py configs) at $SPARK_GRAFT_SF_DIR — the
+same shape bench.py times.
 """
 
 from __future__ import annotations

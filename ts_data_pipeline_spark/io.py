@@ -37,14 +37,6 @@ _NANOS_TS_TABLES = frozenset({"events"})
 #: path -> inferred StructType (see :func:`load`; metadata only).
 _SCHEMA_CACHE: dict[str, T.StructType] = {}
 
-#: sessions whose reader confs are already set — the two conf.set
-#: calls in :func:`load` are idempotent but cost a py4j round trip
-#: each, ~2x11 per bench build pass (r16). Weak so a stopped session
-#: is dropped (and a new object can never alias a dead one's slot).
-import weakref  # noqa: E402
-
-_CONF_SET: "weakref.WeakSet" = weakref.WeakSet()
-
 
 def normalize_timestamps(df: DataFrame, table: str | None = None) -> DataFrame:
     """Normalize every timestamp-like column to ``TimestampType``.
@@ -90,11 +82,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     - ``nanosAsLong=true``: a TIMESTAMP(NANOS) column reads as long
       instead of erroring; :func:`normalize_timestamps` truncates it
       to micros exactly as DuckDB does.
+
+    Both are set on every call (two py4j round trips, the cost of
+    reading them back), so a caller that changes either between loads
+    never leaves a later load reading with the wrong setting.
     """
-    if spark not in _CONF_SET:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        _CONF_SET.add(spark)
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, name)
     # Schema memo (r15): re-inferring the parquet schema costs a
     # driver-side footer read per load (~90-200 ms warm, measured) —

@@ -95,7 +95,7 @@ def segment_order_revenue(
     after projections; pick the strategy deliberately). Sort-merge is
     what the planner itself picks once lineitem's stats exceed the
     threshold (any realistic scale), spills gracefully, and measured
-    -30% at sf0.1 / -17% at synth sf1 (tools/r16_experiments.py,
+    -30% at sf0.1 / -17% at synth sf1 (OPTIMIZATION_r16.md,
     value-identical). AQE may still re-plan the post-shuffle join;
     the hint only forbids the fact-table broadcast.
     """

@@ -13,10 +13,20 @@ The evaluator compiles a spec into a single DataFrame chain:
       -> groupBy(time_bucket, *tags) -> per-parameter aggregates
       -> spine join + interpolation -> orderBy -> page
 
-Everything is built-in Column expressions (zero Python UDFs); the
-only genuinely custom operator is linear interpolation (A8) — a
-closed form over ignore-nulls last/first window frames, since Spark
-has no builtin (SURVEY §4 custom-work list).
+One emitter writes every stage as Spark SQL text (zero Python UDFs):
+a filter, an aggregate or a fill costs one parse round trip instead
+of a py4j call per Column node. Its quoting rule covers every input:
+each column name, parameter id, tag key, tag value, timestamp and
+duration reaches the SQL through :func:`_ident` (a backtick-quoted
+identifier) or :func:`_lit` (an escaped string literal), so any name
+either works or fails loudly, never as a parse error at build time
+or a predicate that silently matches nothing. The only genuinely
+custom operator is linear interpolation (A8) — a closed form over
+ignore-nulls last window frames, since Spark has no builtin (SURVEY
+§4 custom-work list). :func:`oracle_sql` is the separate DuckDB
+reference the differential tests compare against; it shares no
+template with the Spark emitter, so one template bug cannot pass on
+both sides.
 
 Scale notes: the aggregation is a standard partial+final hash agg on
 (bucket, tags) — the natural shuffle key. The interpolation spine is
@@ -28,24 +38,11 @@ group — bounded state per group, no global sort.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 from typing import Optional, Sequence, Union
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: Values/identifiers that may be interpolated into Spark-SQL string
-#: expressions verbatim (the r16 batched plan-build path — one parse
-#: round trip per expression instead of 4-8 py4j calls; same resolved
-#: expression tree, same results). Anything outside this whitelist
-#: falls back to the Column-API builders, so exotic parameter names
-#: keep working exactly as before.
-_SQL_SAFE_RE = re.compile(r"^[0-9A-Za-z_ .:+%-]+$")
-
-
-def _sql_safe(s: object) -> bool:
-    return isinstance(s, str) and bool(_SQL_SAFE_RE.match(s))
 
 # ---------------------------------------------------------------------------
 # Spec dataclasses (one per swagger model)
@@ -146,213 +143,38 @@ class QuerySpec:
 
 
 # ---------------------------------------------------------------------------
-# Evaluator
+# Spark SQL emitter
 # ---------------------------------------------------------------------------
 
-def _agg_column(spec: NumericAggregation, value: Column, ts: Column) -> tuple[str, Column]:
-    """One named aggregate column per (parameter, aggregation).
-
-    The long->wide pivot is conditional aggregation: rows of other
-    parameters contribute NULL, which every aggregate ignores —
-    Catalyst evaluates all requested parameters in one pass.
-    First/Last use min_by/max_by on event-time (deterministic given
-    unique (stream, ts)).
-    """
-    name = f"{spec.parameter}_{spec.aggregation.lower()}"
-    agg = spec.aggregation
-    if agg == "Mean":
-        col = F.round(F.avg(value), 4)
-    elif agg == "Max":
-        col = F.max(value)
-    elif agg == "Min":
-        col = F.min(value)
-    elif agg == "First":
-        col = F.min_by(value, F.when(value.isNotNull(), ts))
-    elif agg == "Last":
-        col = F.max_by(value, F.when(value.isNotNull(), ts))
-    elif agg == "Sum":
-        col = F.round(F.sum(value), 4)
-    elif agg == "Count":
-        col = F.count(value)
-    elif agg == "CountDistinct":
-        # Exact distinct per group: correct at any group width, and
-        # the DuckDB-oracle-checkable form. At 100 TB cardinalities
-        # switch to "ApproxCountDistinct" (HyperLogLog++, one pass,
-        # mergeable sketch state, no per-group distinct expansion) —
-        # engine-specific, so pinned by a relative-error pytest
-        # rather than an oracle row.
-        col = F.count_distinct(value)
-    elif agg == "ApproxCountDistinct":
-        col = F.approx_count_distinct(value)
-    elif agg == "Median":
-        col = F.round(F.median(value), 4)
-    elif agg in ("P90", "P99"):
-        # exact interpolating percentile (same semantics as DuckDB's
-        # quantile_cont); at 100 TB group widths switch to
-        # approx_percentile — the one-pass mergeable sketch — the same
-        # exact/approx split as CountDistinct above.
-        q = 0.90 if agg == "P90" else 0.99
-        col = F.round(F.percentile(value, F.lit(q)), 4)
-    elif agg == "Spread":
-        col = F.round(F.max(value) - F.min(value), 4)
-    else:
-        raise ValueError(f"unsupported aggregation {agg!r}")
-    return name, col.alias(name)
+def _ident(name: str) -> str:
+    """A Spark SQL identifier: backtick-quoted, any backtick inside
+    doubled. The name is matched as ONE part, so a ``.`` in it never
+    reads as a struct-field access."""
+    return "`" + str(name).replace("`", "``") + "`"
 
 
-def _str_agg_column(spec: StringAggregation, value: Column, ts: Column) -> Column:
-    """A5 string/binary aggregate (First/Last/Count only)."""
-    name = f"{spec.parameter}_str_{spec.aggregation.lower()}"
-    agg = spec.aggregation
-    if agg == "First":
-        col = F.min_by(value, F.when(value.isNotNull(), ts))
-    elif agg == "Last":
-        col = F.max_by(value, F.when(value.isNotNull(), ts))
-    elif agg == "Count":
-        col = F.count(value)
-    else:
-        raise ValueError(f"unsupported string aggregation {agg!r}")
-    return col.alias(name)
+def _lit(value: object) -> str:
+    """A Spark SQL string literal. Spark's parser treats ``\\`` as an
+    escape character inside string literals, so backslash is escaped
+    as well as the single quote. Assumes Spark's default
+    ``spark.sql.parser.escapedStringLiterals=false``."""
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _agg_column_sql(
-    spec: NumericAggregation, pcol: str, vcol: str, tcol: str
-) -> tuple[str, str]:
-    """SQL-string twin of :func:`_agg_column` (r16 batched build —
-    VERDICT r15 ask #4): one ``F.expr`` parse round trip per
-    aggregate instead of 4-8 py4j Column calls. Mirrors the Column
-    expression tree exactly (same functions, same CASE nesting, same
-    ROUND grain), so the analyzed plan — and therefore the result —
-    is identical. Only reached when every interpolated token passed
-    ``_sql_safe`` (callers fall back to the Column path otherwise)."""
-    v = f"CASE WHEN `{pcol}` = '{spec.parameter}' THEN `{vcol}` END"
-    t = f"CASE WHEN ({v}) IS NOT NULL THEN `{tcol}` END"
-    name = f"{spec.parameter}_{spec.aggregation.lower()}"
-    agg = spec.aggregation
-    if agg == "Mean":
-        e = f"round(avg({v}), 4)"
-    elif agg == "Max":
-        e = f"max({v})"
-    elif agg == "Min":
-        e = f"min({v})"
-    elif agg == "First":
-        e = f"min_by({v}, {t})"
-    elif agg == "Last":
-        e = f"max_by({v}, {t})"
-    elif agg == "Sum":
-        e = f"round(sum({v}), 4)"
-    elif agg == "Count":
-        e = f"count({v})"
-    elif agg == "CountDistinct":
-        e = f"count(DISTINCT {v})"
-    elif agg == "ApproxCountDistinct":
-        e = f"approx_count_distinct({v})"
-    elif agg == "Median":
-        e = f"round(median({v}), 4)"
-    elif agg in ("P90", "P99"):
-        q = "0.90" if agg == "P90" else "0.99"
-        e = f"round(percentile({v}, {q}), 4)"
-    elif agg == "Spread":
-        e = f"round(max({v}) - min({v}), 4)"
-    else:
-        raise ValueError(f"unsupported aggregation {agg!r}")
-    return name, f"{e} AS `{name}`"
-
-
-def _str_agg_column_sql(
-    spec: StringAggregation, pcol: str, vcol: str, tcol: str
-) -> str:
-    """SQL-string twin of :func:`_str_agg_column` (same contract as
-    :func:`_agg_column_sql`)."""
-    v = f"CASE WHEN `{pcol}` = '{spec.parameter}' THEN `{vcol}` END"
-    t = f"CASE WHEN ({v}) IS NOT NULL THEN `{tcol}` END"
-    name = f"{spec.parameter}_str_{spec.aggregation.lower()}"
-    agg = spec.aggregation
-    if agg == "First":
-        e = f"min_by({v}, {t})"
-    elif agg == "Last":
-        e = f"max_by({v}, {t})"
-    elif agg == "Count":
-        e = f"count({v})"
-    else:
-        raise ValueError(f"unsupported string aggregation {agg!r}")
-    return f"{e} AS `{name}`"
-
-
-def _spec_sql_safe(spec: QuerySpec, *cols: str) -> bool:
-    """True when every token the batched SQL build would interpolate
-    is whitelist-safe (column names, parameter ids, derived aliases).
-    Filters are NOT included here — they batch independently."""
-    return (
-        all(_sql_safe(c) for c in cols)
-        and all(_sql_safe(na.parameter) for na in spec.numeric_aggregations)
-        and all(_sql_safe(sa.parameter) for sa in spec.string_aggregations)
-    )
-
-
-def _tag_predicate_sql_spark(f: TagFilter, tag_sql: str) -> Optional[str]:
-    """Spark-SQL twin of :func:`_tag_predicate`; None when a value is
-    not whitelist-safe (caller falls back to the Column path)."""
-    vals = f.value if isinstance(f.value, (list, tuple)) else [f.value]
-    if not all(_sql_safe(v) for v in vals):
-        return None
-    if f.operator == "Equal":
-        if isinstance(f.value, (list, tuple)):
-            return f"{tag_sql} IN ({', '.join(repr(str(v)) for v in f.value)})"
-        return f"{tag_sql} = '{f.value}'"
-    if f.operator == "NotEqual":
-        if isinstance(f.value, (list, tuple)):
-            return (
-                f"NOT ({tag_sql} IN "
-                f"({', '.join(repr(str(v)) for v in f.value)}))"
-            )
-        return f"NOT ({tag_sql} = '{f.value}')"
-    if f.operator == "Like":
-        return f"{tag_sql} LIKE '{_like_pattern(f)}'"
-    if f.operator == "NotLike":
-        return f"NOT ({tag_sql} LIKE '{_like_pattern(f)}')"
-    raise ValueError(f"unsupported tag operator {f.operator!r}")
-
-
-def _filters_sql(
-    spec: QuerySpec, stream_col: str, ts_col: str, tags_col: str
-) -> Optional[str]:
-    """All spec filters as ONE Spark-SQL predicate string (a single
-    py4j round trip instead of ~5 per filter). Returns None when any
-    token fails the whitelist — the caller then applies the original
-    per-filter Column predicates. The conjunction is split back into
-    the same individual predicates by the optimizer, so pushdown and
-    results are unchanged. Empty string = no filters."""
-    if not all(_sql_safe(c) for c in (stream_col, ts_col, tags_col)):
-        return None
-    parts: list[str] = []
-    if spec.from_ts is not None:
-        if not _sql_safe(spec.from_ts):
-            return None
-        parts.append(f"`{ts_col}` >= CAST('{spec.from_ts}' AS TIMESTAMP)")
-    if spec.to_ts is not None:
-        if not _sql_safe(spec.to_ts):
-            return None
-        parts.append(f"`{ts_col}` < CAST('{spec.to_ts}' AS TIMESTAMP)")
-    if spec.stream_ids is not None:
-        if not all(_sql_safe(s) for s in spec.stream_ids):
-            return None
-        ids = ", ".join(repr(str(s)) for s in spec.stream_ids)
-        parts.append(f"`{stream_col}` IN ({ids})")
-    for tf in spec.tag_filters:
-        if not _sql_safe(tf.tag):
-            return None
-        p = _tag_predicate_sql_spark(tf, f"`{tags_col}`['{tf.tag}']")
-        if p is None:
-            return None
-        parts.append(p)
-    return " AND ".join(parts)
+def _values(field: str, values: Sequence[str]) -> list[str]:
+    """The value list of an IN predicate. An empty list has no SQL
+    spelling (``IN ()`` is a parse error in Spark and DuckDB alike),
+    so it is rejected with the field named. Shared by the Spark
+    emitter and :func:`oracle_sql`."""
+    vals = list(values)
+    if not vals:
+        raise ValueError(f"{field} must list at least one value, got []")
+    return vals
 
 
 def _like_pattern(f: TagFilter) -> str:
     """The one pattern a Like/NotLike filter matches. A value list has
-    no LIKE meaning (the SQL path would interpolate its repr, the
-    Column path would match nothing), so it is rejected."""
+    no LIKE meaning, so it is rejected."""
     if isinstance(f.value, (list, tuple)):
         raise ValueError(
             f"tag operator {f.operator!r} takes one pattern, "
@@ -361,20 +183,103 @@ def _like_pattern(f: TagFilter) -> str:
     return str(f.value)
 
 
-def _tag_predicate(f: TagFilter, tag_value: Column) -> Column:
-    if f.operator == "Equal":
+def _tag_predicate(f: TagFilter, tag: str) -> str:
+    """F6 theta predicate on the tag-value expression ``tag``."""
+    if f.operator in ("Equal", "NotEqual"):
         if isinstance(f.value, (list, tuple)):
-            return tag_value.isin(*f.value)
-        return tag_value == f.value
-    if f.operator == "NotEqual":
-        if isinstance(f.value, (list, tuple)):
-            return ~tag_value.isin(*f.value)
-        return tag_value != f.value
-    if f.operator == "Like":
-        return tag_value.like(_like_pattern(f))
-    if f.operator == "NotLike":
-        return ~tag_value.like(_like_pattern(f))
+            vals = _values(f"tag filter {f.tag!r} {f.operator}", f.value)
+            p = f"{tag} IN ({', '.join(_lit(v) for v in vals)})"
+        else:
+            p = f"{tag} = {_lit(f.value)}"
+        return p if f.operator == "Equal" else f"NOT ({p})"
+    if f.operator in ("Like", "NotLike"):
+        p = f"{tag} LIKE {_lit(_like_pattern(f))}"
+        return p if f.operator == "Like" else f"NOT ({p})"
     raise ValueError(f"unsupported tag operator {f.operator!r}")
+
+
+def _tag_key(tags_col: str, tag: str) -> str:
+    """A9 group key: one tag's value, exposed as ``tag_<name>``."""
+    return f"{_ident(tags_col)}[{_lit(tag)}] AS {_ident('tag_' + tag)}"
+
+
+def _in(field: str, col: str, values: Sequence[str]) -> str:
+    return f"{_ident(col)} IN ({', '.join(_lit(v) for v in _values(field, values))})"
+
+
+def _filter(
+    df: DataFrame,
+    *,
+    ts_col: str,
+    from_ts: Optional[str],
+    to_ts: Optional[str],
+    tags_col: str,
+    tag_filters: Sequence[TagFilter],
+    isin: Sequence[tuple[str, str, Optional[Sequence[str]]]] = (),
+    notin: Sequence[tuple[str, str, Optional[Sequence[str]]]] = (),
+) -> DataFrame:
+    """F4 time range (inclusive from, exclusive to — ns-epoch bounds in
+    the contract, ISO strings here), F5/F8 membership lists and F6 tag
+    filters (AND of all) as ONE predicate: one parse round trip, which
+    the optimizer splits back into the individual pushed predicates.
+    ``isin``/``notin`` hold (field, column, values) triples; values
+    None means no filter."""
+    parts: list[str] = []
+    if from_ts is not None:
+        parts.append(f"{_ident(ts_col)} >= CAST({_lit(from_ts)} AS TIMESTAMP)")
+    if to_ts is not None:
+        parts.append(f"{_ident(ts_col)} < CAST({_lit(to_ts)} AS TIMESTAMP)")
+    parts += [_in(*m) for m in isin if m[2] is not None]
+    parts += [f"NOT ({_in(*m)})" for m in notin if m[2] is not None]
+    parts += [
+        _tag_predicate(tf, f"{_ident(tags_col)}[{_lit(tf.tag)}]")
+        for tf in tag_filters
+    ]
+    return df.filter(" AND ".join(parts)) if parts else df
+
+
+#: A4/A5 aggregates over ``{v}``, the parameter's conditional value,
+#: and ``{t}``, its event time where the value is non-null. The
+#: long->wide pivot is conditional aggregation: rows of other
+#: parameters contribute NULL, which every aggregate ignores, so
+#: Catalyst evaluates all requested parameters in one pass.
+#: First/Last are min_by/max_by on event time (deterministic given
+#: unique (stream, ts)).
+_AGG_SQL = {
+    "Mean": "round(avg({v}), 4)",
+    "Max": "max({v})",
+    "Min": "min({v})",
+    "First": "min_by({v}, {t})",
+    "Last": "max_by({v}, {t})",
+    "Sum": "round(sum({v}), 4)",
+    "Count": "count({v})",
+    # Exact distinct per group: correct at any group width, and the
+    # DuckDB-oracle-checkable form. At 100 TB cardinalities switch to
+    # ApproxCountDistinct (HyperLogLog++, one pass, mergeable sketch
+    # state, no per-group distinct expansion) — engine-specific, so
+    # pinned by a relative-error pytest rather than an oracle row.
+    "CountDistinct": "count(DISTINCT {v})",
+    "ApproxCountDistinct": "approx_count_distinct({v})",
+    "Median": "round(median({v}), 4)",
+    # exact interpolating percentile (same semantics as DuckDB's
+    # quantile_cont); at 100 TB group widths switch to
+    # approx_percentile — the one-pass mergeable sketch — the same
+    # exact/approx split as CountDistinct.
+    "P90": "round(percentile({v}, 0.90), 4)",
+    "P99": "round(percentile({v}, 0.99), 4)",
+    "Spread": "round(max({v}) - min({v}), 4)",
+}
+
+_STR_AGG_SQL = {a: _AGG_SQL[a] for a in STRING_AGGS if a != "None"}
+
+
+def _agg_expr(
+    parameter: str, template: str, name: str, pcol: str, vcol: str, tcol: str
+) -> str:
+    """One named conditional aggregate of ``parameter``'s values."""
+    v = f"CASE WHEN {_ident(pcol)} = {_lit(parameter)} THEN {_ident(vcol)} END"
+    t = f"CASE WHEN ({v}) IS NOT NULL THEN {_ident(tcol)} END"
+    return f"{template.format(v=v, t=t)} AS {_ident(name)}"
 
 
 def evaluate(
@@ -393,45 +298,16 @@ def evaluate(
     Returns one row per (time bucket x tag group) with one column per
     requested (parameter, aggregation), bucket exposed as ``bucket``.
     """
-    df = parameter_values
-    ts = F.col(ts_col)
+    df = _filter(
+        parameter_values,
+        ts_col=ts_col,
+        from_ts=spec.from_ts,
+        to_ts=spec.to_ts,
+        tags_col=tags_col,
+        tag_filters=spec.tag_filters,
+        isin=[("stream_ids", stream_col, spec.stream_ids)],
+    )
 
-    # F4 time range (inclusive from, exclusive to — ns-epoch bounds in
-    # the contract, ISO strings here), F5 stream ids, F6 tag filters
-    # (AND of all). Batched into one SQL predicate when every token is
-    # whitelist-safe (r16 plan-build cost, VERDICT r15 ask #4): the
-    # optimizer splits the conjunction back into the same pushed
-    # predicates, so plan and results are unchanged.
-    fsql = _filters_sql(spec, stream_col, ts_col, tags_col)
-    if fsql is not None:
-        if fsql:
-            df = df.filter(fsql)
-    else:
-        if spec.from_ts is not None:
-            df = df.filter(ts >= F.lit(spec.from_ts).cast("timestamp"))
-        if spec.to_ts is not None:
-            df = df.filter(ts < F.lit(spec.to_ts).cast("timestamp"))
-        if spec.stream_ids is not None:
-            df = df.filter(F.col(stream_col).isin(*spec.stream_ids))
-        for tf in spec.tag_filters:
-            df = df.filter(_tag_predicate(tf, F.col(tags_col)[tf.tag]))
-
-    # Group keys: time bucket (A7) x tag values (A9). The window
-    # struct itself is the grouping expression (projecting .start
-    # inside the key would hide the event-time window from the
-    # streaming watermark checker); bucket = win.start is selected
-    # after the agg.
-    keys: list[Column] = []
-    names: list[str] = []
-    if spec.group_by_time is not None:
-        keys.append(F.window(ts, spec.group_by_time.duration).alias("_win"))
-        names.append("bucket")
-    for t in spec.group_by_tags:
-        keys.append(F.col(tags_col)[t].alias(f"tag_{t}"))
-        names.append(f"tag_{t}")
-
-    # A4 per-parameter aggregates via conditional aggregation.
-    value = F.col(value_col)
     raw_numeric = [na for na in spec.numeric_aggregations if na.aggregation == "None"]
     raw_string = [sa for sa in spec.string_aggregations if sa.aggregation == "None"]
     if raw_numeric or raw_string:
@@ -448,76 +324,85 @@ def evaluate(
             )
         if spec.group_by_time is not None:
             raise ValueError("'None' returns raw samples; group_by_time does not apply")
+        pcol = _ident(parameter_col)
         params = [na.parameter for na in raw_numeric] + [
             sa.parameter for sa in raw_string
         ]
-        out = df.filter(F.col(parameter_col).isin(params)).select(
-            ts.alias("ts"),
-            *[F.col(tags_col)[t].alias(f"tag_{t}") for t in spec.group_by_tags],
+        out = df.filter(_in("parameters", parameter_col, params)).selectExpr(
+            f"{_ident(ts_col)} AS ts",
+            *[_tag_key(tags_col, t) for t in spec.group_by_tags],
             *[
-                F.when(F.col(parameter_col) == na.parameter, value).alias(
-                    f"{na.parameter}_none"
-                )
+                f"CASE WHEN {pcol} = {_lit(na.parameter)} THEN "
+                f"{_ident(value_col)} END AS {_ident(na.parameter + '_none')}"
                 for na in raw_numeric
             ],
             *[
-                F.when(F.col(parameter_col) == sa.parameter, F.col(str_value_col)).alias(
-                    f"{sa.parameter}_str_none"
-                )
+                f"CASE WHEN {pcol} = {_lit(sa.parameter)} THEN "
+                f"{_ident(str_value_col)} END AS "
+                f"{_ident(sa.parameter + '_str_none')}"
                 for sa in raw_string
             ],
         )
         return _order_page(out, spec)
-    aggs = []
-    out_value_cols = []
-    if _spec_sql_safe(spec, parameter_col, value_col, str_value_col, ts_col):
-        # batched build: one F.expr parse per aggregate (r16) — the
-        # SQL twins mirror the Column trees exactly, results identical
-        for na in spec.numeric_aggregations:
-            name, sql = _agg_column_sql(na, parameter_col, value_col, ts_col)
-            aggs.append(F.expr(sql))
-            out_value_cols.append(name)
-        for sa in spec.string_aggregations:
-            aggs.append(
-                F.expr(
-                    _str_agg_column_sql(sa, parameter_col, str_value_col, ts_col)
-                )
-            )
-    else:
-        for na in spec.numeric_aggregations:
-            cond_value = F.when(F.col(parameter_col) == na.parameter, value)
-            name, col = _agg_column(na, cond_value, ts)
-            aggs.append(col)
-            out_value_cols.append(name)
-        for sa in spec.string_aggregations:
-            cond_value = F.when(
-                F.col(parameter_col) == sa.parameter, F.col(str_value_col)
-            )
-            aggs.append(_str_agg_column(sa, cond_value, ts))
-            # string channels are excluded from numeric interpolation
-            # (interpolationType only applies to numeric series).
+
+    # Group keys: time bucket (A7) x tag values (A9). The window
+    # struct itself is the grouping expression (projecting .start
+    # inside the key would hide the event-time window from the
+    # streaming watermark checker); bucket = win.start is selected
+    # after the agg.
+    gbt = spec.group_by_time
+    keys: list[str] = []
+    names: list[str] = []
+    if gbt is not None:
+        keys.append(f"window({_ident(ts_col)}, {_lit(gbt.duration)}) AS _win")
+        names.append("bucket")
+    for t in spec.group_by_tags:
+        keys.append(_tag_key(tags_col, t))
+        names.append(f"tag_{t}")
+
+    # A4 per-parameter aggregates, A5 string-channel aggregates. String
+    # channels are excluded from numeric interpolation
+    # (interpolationType only applies to numeric series).
+    aggs: list[str] = []
+    value_cols: list[str] = []
+    str_cols: list[str] = []
+    for na in spec.numeric_aggregations:
+        if na.aggregation not in _AGG_SQL:
+            raise ValueError(f"unsupported aggregation {na.aggregation!r}")
+        name = f"{na.parameter}_{na.aggregation.lower()}"
+        aggs.append(_agg_expr(na.parameter, _AGG_SQL[na.aggregation], name,
+                              parameter_col, value_col, ts_col))
+        value_cols.append(name)
+    for sa in spec.string_aggregations:
+        if sa.aggregation not in _STR_AGG_SQL:
+            raise ValueError(f"unsupported string aggregation {sa.aggregation!r}")
+        name = f"{sa.parameter}_str_{sa.aggregation.lower()}"
+        aggs.append(_agg_expr(sa.parameter, _STR_AGG_SQL[sa.aggregation], name,
+                              parameter_col, str_value_col, ts_col))
+        str_cols.append(name)
     if not aggs:
         raise ValueError("QuerySpec requires at least one aggregation")
 
-    out = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
-    if spec.group_by_time is not None:
-        out = out.select(
-            F.col("_win.start").alias("bucket"),
-            *[n for n in names if n != "bucket"],
-            *out_value_cols,
-            *[f"{sa.parameter}_str_{sa.aggregation.lower()}" for sa in spec.string_aggregations],
-        )
+    agg_cols = [F.expr(a) for a in aggs]
+    out = (
+        df.groupBy(*[F.expr(k) for k in keys]).agg(*agg_cols)
+        if keys else df.agg(*agg_cols)
+    )
+    if gbt is None:
+        return _order_page(out, spec)
+    out = out.selectExpr(
+        "_win.start AS bucket",
+        *[_ident(c) for c in names[1:] + value_cols + str_cols],
+    )
 
     # A8 interpolation over the time spine.
-    gbt = spec.group_by_time
-    if gbt is not None and gbt.interpolation != "None":
+    if gbt.interpolation != "None":
         if spec.from_ts is None or spec.to_ts is None:
             raise ValueError("interpolation requires from_ts and to_ts")
-        spine = _bucket_spine(out, spec, names)
+        spine = _bucket_spine(out, spec.from_ts, spec.to_ts, gbt.duration, names[1:])
         out = spine.join(out, on=names, how="left")
         if gbt.interpolation in ("Previous", "Linear"):
-            group_cols = [n for n in names if n != "bucket"]
-            out = _fill(out, out_value_cols, group_cols, gbt.interpolation)
+            out = _fill(out, value_cols, names[1:], gbt.interpolation)
 
     return _order_page(out, spec)
 
@@ -527,7 +412,9 @@ def _order_page(out: DataFrame, spec: QuerySpec) -> DataFrame:
     if spec.orderings:
         out = out.orderBy(
             *[
-                F.col(o.by).desc() if o.direction == "Desc" else F.col(o.by).asc()
+                F.col(_ident(o.by)).desc()
+                if o.direction == "Desc"
+                else F.col(_ident(o.by)).asc()
                 for o in spec.orderings
             ]
         )
@@ -560,27 +447,23 @@ def tag_values(
     the tag value — the distinct count of streams rides the same
     shuffle.
     """
-    df = parameter_values
-    ts = F.col(ts_col)
-    if from_ts is not None:
-        df = df.filter(ts >= F.lit(from_ts).cast("timestamp"))
-    if to_ts is not None:
-        df = df.filter(ts < F.lit(to_ts).cast("timestamp"))
-    if stream_ids is not None:
-        df = df.filter(F.col(stream_col).isin(*stream_ids))
-    for tf in tag_filters:
-        df = df.filter(_tag_predicate(tf, F.col(tags_col)[tf.tag]))
+    df = _filter(
+        parameter_values,
+        ts_col=ts_col,
+        from_ts=from_ts,
+        to_ts=to_ts,
+        tags_col=tags_col,
+        tag_filters=tag_filters,
+        isin=[("stream_ids", stream_col, stream_ids)],
+    )
     return (
-        df.select(
-            F.col(tags_col)[tag_key].alias("tag_value"),
-            F.col(stream_col).alias("_sid"),
+        df.selectExpr(
+            f"{_ident(tags_col)}[{_lit(tag_key)}] AS tag_value",
+            f"{_ident(stream_col)} AS _sid",
         )
-        .filter(F.col("tag_value").isNotNull())
+        .filter("tag_value IS NOT NULL")
         .groupBy("tag_value")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count_distinct("_sid").alias("n_streams"),
-        )
+        .agg(F.expr("count(1) AS n_rows"), F.expr("count(DISTINCT _sid) AS n_streams"))
         .orderBy("tag_value")
     )
 
@@ -640,7 +523,7 @@ def interpolate_finals(result: DataFrame, spec: QuerySpec) -> DataFrame:
         return _order_page(result, spec)
     if spec.from_ts is None or spec.to_ts is None:
         raise ValueError("interpolation requires from_ts and to_ts")
-    names = ["bucket"] + [f"tag_{t}" for t in spec.group_by_tags]
+    group_cols = [f"tag_{t}" for t in spec.group_by_tags]
     value_cols = [
         f"{na.parameter}_{na.aggregation.lower()}"
         for na in spec.numeric_aggregations
@@ -652,17 +535,15 @@ def interpolate_finals(result: DataFrame, spec: QuerySpec) -> DataFrame:
     # spine->result a self-join, and a memory-sink-backed finals
     # table cannot deduplicate its attributes there (Conflicting
     # attributes analysis error).
-    spine = _bucket_spine(result, spec, ["bucket"])
-    group_cols = [n for n in names if n != "bucket"]
+    spine = _bucket_spine(result, spec.from_ts, spec.to_ts, gbt.duration, [])
     if group_cols:
-        grp_rel = result.select(*group_cols)
+        grp_rel = result.selectExpr(*[_ident(c) for c in group_cols])
         groups = result.sparkSession.createDataFrame(
             grp_rel.distinct().collect(), grp_rel.schema
         )
         spine = spine.crossJoin(groups)
-    out = spine.join(result, on=names, how="left")
+    out = spine.join(result, on=["bucket", *group_cols], how="left")
     if gbt.interpolation in ("Previous", "Linear"):
-        group_cols = [n for n in names if n != "bucket"]
         out = _fill(out, value_cols, group_cols, gbt.interpolation)
     return _order_page(out, spec)
 
@@ -712,35 +593,32 @@ def evaluate_events(
     aggregated string value and occurrence count — the columnar
     ``events{}`` block of the Data response (data.ts:37-40).
     """
-    df = events
-    ts = F.col(ts_col)
-    if spec.from_ts is not None:
-        df = df.filter(ts >= F.lit(spec.from_ts).cast("timestamp"))
-    if spec.to_ts is not None:
-        df = df.filter(ts < F.lit(spec.to_ts).cast("timestamp"))
-    if spec.stream_ids is not None:
-        df = df.filter(F.col(stream_col).isin(*spec.stream_ids))
-    if spec.event_ids is not None:
-        df = df.filter(F.col(event_col).isin(*spec.event_ids))
-    if spec.include_levels is not None:
-        df = df.filter(F.col(level_col).isin(*spec.include_levels))
-    if spec.exclude_levels is not None:
-        df = df.filter(~F.col(level_col).isin(*spec.exclude_levels))
-    for tf in spec.tag_filters:
-        df = df.filter(_tag_predicate(tf, F.col(tags_col)[tf.tag]))
+    df = _filter(
+        events,
+        ts_col=ts_col,
+        from_ts=spec.from_ts,
+        to_ts=spec.to_ts,
+        tags_col=tags_col,
+        tag_filters=spec.tag_filters,
+        isin=[
+            ("stream_ids", stream_col, spec.stream_ids),
+            ("event_ids", event_col, spec.event_ids),
+            ("include_levels", level_col, spec.include_levels),
+        ],
+        notin=[("exclude_levels", level_col, spec.exclude_levels)],
+    )
 
-    keys: list[Column] = [F.col(event_col)]
+    keys: list[str] = [_ident(event_col)]
     out_keys: list[str] = [event_col]
     if spec.interval is not None:
         # Group by the window struct (streaming-watermark-visible),
         # project bucket afterwards — same reasoning as evaluate().
-        keys.insert(0, F.window(ts, spec.interval).alias("_win"))
+        keys.insert(0, f"window({_ident(ts_col)}, {_lit(spec.interval)}) AS _win")
         out_keys.insert(0, "bucket")
     for t in spec.group_by_tags:
-        keys.append(F.col(tags_col)[t].alias(f"tag_{t}"))
+        keys.append(_tag_key(tags_col, t))
         out_keys.append(f"tag_{t}")
 
-    value = F.col(value_col)
     agg = spec.aggregation
     if spec.interpolation == "Linear" and agg != "Count":
         # validated HERE, not inside the interval branch: an
@@ -752,47 +630,32 @@ def evaluate_events(
             f"aggregation (Count); got {agg!r} "
             "whose event values are strings"
         )
-    if agg == "First":
-        val_col = F.min_by(value, F.when(value.isNotNull(), ts)).alias("event_value")
-    elif agg == "Last":
-        val_col = F.max_by(value, F.when(value.isNotNull(), ts)).alias("event_value")
-    elif agg in ("Count", "None"):
-        val_col = None
-    else:
-        raise ValueError(f"unsupported event aggregation {agg!r}")
-    aggs = [F.count(F.lit(1)).alias("event_count")]
+    aggs = ["count(1) AS event_count"]
     val_names = ["event_count"]
-    if val_col is not None:
-        aggs.insert(0, val_col)
+    if agg in ("First", "Last"):
+        v = _ident(value_col)
+        t = f"CASE WHEN {v} IS NOT NULL THEN {_ident(ts_col)} END"
+        fn = "min_by" if agg == "First" else "max_by"
+        aggs.insert(0, f"{fn}({v}, {t}) AS event_value")
         val_names.insert(0, "event_value")
-    out = df.groupBy(*keys).agg(*aggs)
-    if spec.interval is not None:
-        out = out.select(
-            F.col("_win.start").alias("bucket"),
-            *[k for k in out_keys if k != "bucket"],
-            *val_names,
-        )
+    elif agg not in ("Count", "None"):
+        raise ValueError(f"unsupported event aggregation {agg!r}")
+    out = df.groupBy(*[F.expr(k) for k in keys]).agg(*[F.expr(a) for a in aggs])
+    if spec.interval is None:
+        return out
+    out = out.selectExpr(
+        "_win.start AS bucket", *[_ident(c) for c in out_keys[1:] + val_names]
+    )
 
     # A8-on-events: dense bucket spine per event channel. Counts
     # Null-fill to 0 (an absent bucket has zero occurrences);
     # event_value fills per the interpolation mode.
-    if spec.interval is not None and spec.interpolation != "None":
+    if spec.interpolation != "None":
         if spec.from_ts is None or spec.to_ts is None:
             raise ValueError("interpolation requires from_ts and to_ts")
-        group_cols = [k for k in out_keys if k != "bucket"]
-        spine = out.sparkSession.range(1).select(
-            F.explode(
-                F.expr(
-                    f"sequence(cast('{spec.from_ts}' as timestamp), "
-                    f"cast('{spec.to_ts}' as timestamp) - interval {spec.interval}, "
-                    f"interval {spec.interval})"
-                )
-            ).alias("bucket")
-        )
-        bucket_type = out.schema["bucket"].dataType.simpleString()
-        spine = spine.select(F.col("bucket").cast(bucket_type).alias("bucket"))
-        spine = spine.crossJoin(out.select(*group_cols).distinct())
-        out = spine.join(out, on=["bucket", *group_cols], how="left")
+        group_cols = out_keys[1:]
+        spine = _bucket_spine(out, spec.from_ts, spec.to_ts, spec.interval, group_cols)
+        out = spine.join(out, on=out_keys, how="left")
         if spec.interpolation == "Linear":
             # interpolationType.ts:16 allows Linear on event channels;
             # it is well-defined exactly when the aggregated value
@@ -803,147 +666,100 @@ def evaluate_events(
             # numeric fill); buckets outside the observed range stay
             # null. First/Last values are strings -> rejected up
             # front (the validation at function entry).
-            out = out.withColumn(
-                "event_count", F.col("event_count").cast("double")
-            )
-            out = _fill(out, ["event_count"], group_cols, "Linear")
-            return out
-        out = out.withColumn("event_count", F.coalesce("event_count", F.lit(0)))
-        if spec.interpolation == "Previous" and "event_value" in out.columns:
-            w_back = (
-                Window.partitionBy(*group_cols)
-                .orderBy("bucket")
-                .rowsBetween(Window.unboundedPreceding, 0)
-            )
-            out = out.withColumn(
-                "event_value",
-                F.last(F.col("event_value"), ignorenulls=True).over(w_back),
-            )
-        elif spec.interpolation not in ("Null", "Previous"):
+            out = out.withColumn("event_count", F.expr("CAST(event_count AS DOUBLE)"))
+            return _fill(out, ["event_count"], group_cols, "Linear")
+        if spec.interpolation not in ("Null", "Previous"):
             raise ValueError(f"unsupported event interpolation {spec.interpolation!r}")
+        out = out.withColumn("event_count", F.expr("coalesce(event_count, 0)"))
+        if spec.interpolation == "Previous" and "event_value" in out.columns:
+            out = _fill(out, ["event_value"], group_cols, "Previous")
     return out
 
 
-def _bucket_spine(out: DataFrame, spec: QuerySpec, names: list[str]) -> DataFrame:
+def _bucket_spine(
+    out: DataFrame,
+    from_ts: str,
+    to_ts: str,
+    duration: str,
+    group_cols: Sequence[str],
+) -> DataFrame:
     """Dense (bucket x tag-group) spine via sequence+explode.
 
-    The sequence spans [from, to) at the bucket duration; distinct
-    tag groups come from the aggregated result (small). cross-join of
-    two tiny relations — broadcast by the planner.
+    The sequence spans [from, to) at the bucket duration, cast to the
+    bucket dtype window() produced over the input's timestamp flavor
+    (NTZ vs LTZ) so the join key lines up. Distinct tag groups come
+    from the aggregated result (small): cross-join of two tiny
+    relations — broadcast by the planner.
     """
-    gbt = spec.group_by_time
-    assert gbt is not None
-    dur = gbt.duration
-    spine = out.sparkSession.range(1).select(
-        F.explode(
-            F.expr(
-                f"sequence(cast('{spec.from_ts}' as timestamp), "
-                f"cast('{spec.to_ts}' as timestamp) - interval {dur}, "
-                f"interval {dur})"
-            )
-        ).alias("bucket")
-    )
-    # Match the bucket dtype produced by window() over the input's
-    # timestamp flavor (NTZ vs LTZ) so the join key lines up.
+    dur = f"INTERVAL {_lit(duration)}"
     bucket_type = out.schema["bucket"].dataType.simpleString()
-    spine = spine.select(F.col("bucket").cast(bucket_type).alias("bucket"))
-    group_cols = [n for n in names if n != "bucket"]
+    spine = out.sparkSession.range(1).selectExpr(
+        f"explode(sequence(CAST({_lit(from_ts)} AS TIMESTAMP), "
+        f"CAST({_lit(to_ts)} AS TIMESTAMP) - {dur}, {dur})) AS bucket"
+    ).selectExpr(f"CAST(bucket AS {bucket_type}) AS bucket")
     if group_cols:
-        spine = spine.crossJoin(out.select(*group_cols).distinct())
+        spine = spine.crossJoin(
+            out.selectExpr(*[_ident(g) for g in group_cols]).distinct()
+        )
     return spine
 
 
 def _fill(
-    out: DataFrame, value_cols: list[str], group_cols: list[str], mode: str
+    out: DataFrame, value_cols: Sequence[str], group_cols: Sequence[str], mode: str
 ) -> DataFrame:
-    """Previous / Linear gap fill over the bucket spine (A8).
+    """Previous / Linear gap fill over the bucket spine (A8), as ONE
+    selectExpr with the value columns replaced in place.
 
     Previous: last non-null before the bucket (per tag group).
     Linear: closed-form interpolation between the surrounding
     non-null observations — prev + (next-prev) * elapsed/gap.
+
+    "Next non-null ahead" is a running ignore-nulls ``last`` over the
+    REVERSED ordering (an unbounded-PRECEDING frame): the natural
+    ``first ignorenulls`` over ``0..unboundedFollowing`` is an
+    UnboundedFollowing frame that Spark recomputes from scratch per
+    row — O(n²) per tag group (a year of 1-minute buckets is 525k
+    rows per group). Same fix as funnel/as-of-forward
+    (operators/tsstats.py, asof.py); costs one extra per-partition
+    sort on the SAME shuffle partitioning.
     """
-    if all(_sql_safe(c) for c in [*value_cols, *group_cols, *out.columns]):
-        # batched build (r16): the whole fill stage as ONE selectExpr —
-        # the Column spelling costs ~15 py4j round trips per value
-        # column (two window specs, four ignore-nulls lasts, the
-        # closed-form arithmetic). The SQL strings mirror the Column
-        # trees exactly: same window frames, same ignore-nulls lasts,
-        # same ROUND grain, columns replaced in place (original order).
-        part = (
-            f"PARTITION BY {', '.join(f'`{g}`' for g in group_cols)} "
-            if group_cols
-            else "PARTITION BY 1 "
-        )
-        w_back = (
-            f"OVER ({part}ORDER BY `bucket` ASC ROWS BETWEEN "
-            f"UNBOUNDED PRECEDING AND CURRENT ROW)"
-        )
-        w_fwd = (
-            f"OVER ({part}ORDER BY `bucket` DESC ROWS BETWEEN "
-            f"UNBOUNDED PRECEDING AND CURRENT ROW)"
-        )
-        fills: dict[str, str] = {}
-        for c in value_cols:
-            if mode == "Previous":
-                fills[c] = f"last(`{c}`, true) {w_back} AS `{c}`"
-                continue
-            pv = f"last(`{c}`, true) {w_back}"
-            nv = f"last(`{c}`, true) {w_fwd}"
-            pb = (
-                f"last(CASE WHEN `{c}` IS NOT NULL THEN "
-                f"unix_micros(`bucket`) END, true) {w_back}"
-            )
-            nb = (
-                f"last(CASE WHEN `{c}` IS NOT NULL THEN "
-                f"unix_micros(`bucket`) END, true) {w_fwd}"
-            )
-            fills[c] = (
-                f"CASE WHEN `{c}` IS NOT NULL THEN `{c}` "
-                f"WHEN ({pv}) IS NULL OR ({nv}) IS NULL THEN NULL "
-                f"ELSE round(({pv}) + (({nv}) - ({pv})) * "
-                f"CAST(unix_micros(`bucket`) - ({pb}) AS DOUBLE) / "
-                f"CAST(({nb}) - ({pb}) AS DOUBLE), 4) END AS `{c}`"
-            )
-        return out.selectExpr(
-            *[fills.get(c, f"`{c}`") for c in out.columns]
-        )
-    part = Window.partitionBy(*group_cols) if group_cols else Window.partitionBy(F.lit(1))
-    w_back = part.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    # "Next non-null ahead" over the REVERSED ordering as a running
-    # unbounded-PRECEDING frame: the natural `first ignorenulls` over
-    # `0..unboundedFollowing` is an UnboundedFollowing frame that
-    # Spark recomputes from scratch per row — O(n²) per tag group (a
-    # year of 1-minute buckets is 525k rows per group). Same fix as
-    # funnel/as-of-forward (operators/tsstats.py, asof.py); costs one
-    # extra per-partition sort on the SAME shuffle partitioning.
-    w_fwd = part.orderBy(F.col("bucket").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
+    part = (
+        f"PARTITION BY {', '.join(_ident(g) for g in group_cols)} "
+        if group_cols
+        else "PARTITION BY 1 "
     )
-    bucket_us = F.unix_micros(F.col("bucket"))
+    w_back = (
+        f"OVER ({part}ORDER BY `bucket` ASC ROWS BETWEEN "
+        f"UNBOUNDED PRECEDING AND CURRENT ROW)"
+    )
+    w_fwd = (
+        f"OVER ({part}ORDER BY `bucket` DESC ROWS BETWEEN "
+        f"UNBOUNDED PRECEDING AND CURRENT ROW)"
+    )
+    fills: dict[str, str] = {}
     for c in value_cols:
-        v = F.col(c)
+        q = _ident(c)
         if mode == "Previous":
-            out = out.withColumn(c, F.last(v, ignorenulls=True).over(w_back))
+            fills[c] = f"last({q}, true) {w_back} AS {q}"
             continue
-        prev_v = F.last(v, ignorenulls=True).over(w_back)
-        next_v = F.last(v, ignorenulls=True).over(w_fwd)
-        prev_b = F.last(F.when(v.isNotNull(), bucket_us), ignorenulls=True).over(w_back)
-        next_b = F.last(F.when(v.isNotNull(), bucket_us), ignorenulls=True).over(w_fwd)
-        interp = (
-            F.when(v.isNotNull(), v)
-            .when(prev_v.isNull() | next_v.isNull(), F.lit(None))
-            .otherwise(
-                F.round(
-                    prev_v
-                    + (next_v - prev_v)
-                    * (bucket_us - prev_b).cast("double")
-                    / (next_b - prev_b).cast("double"),
-                    4,
-                )
-            )
+        pv = f"last({q}, true) {w_back}"
+        nv = f"last({q}, true) {w_fwd}"
+        pb = (
+            f"last(CASE WHEN {q} IS NOT NULL THEN "
+            f"unix_micros(`bucket`) END, true) {w_back}"
         )
-        out = out.withColumn(c, interp)
-    return out
+        nb = (
+            f"last(CASE WHEN {q} IS NOT NULL THEN "
+            f"unix_micros(`bucket`) END, true) {w_fwd}"
+        )
+        fills[c] = (
+            f"CASE WHEN {q} IS NOT NULL THEN {q} "
+            f"WHEN ({pv}) IS NULL OR ({nv}) IS NULL THEN NULL "
+            f"ELSE round(({pv}) + (({nv}) - ({pv})) * "
+            f"CAST(unix_micros(`bucket`) - ({pb}) AS DOUBLE) / "
+            f"CAST(({nb}) - ({pb}) AS DOUBLE), 4) END AS {q}"
+        )
+    return out.selectExpr(*[fills.get(c, _ident(c)) for c in out.columns])
 
 
 # ---------------------------------------------------------------------------
@@ -983,15 +799,19 @@ def _sql_lit(v: str) -> str:
     return "'" + str(v).replace("'", "''") + "'"
 
 
+def _sql_ident(name: str) -> str:
+    """A DuckDB identifier: double-quoted, any ``"`` inside doubled."""
+    return '"' + str(name).replace('"', '""') + '"'
+
+
 def _tag_predicate_sql(f: TagFilter, col: str) -> str:
-    if f.operator == "Equal":
+    if f.operator in ("Equal", "NotEqual"):
         if isinstance(f.value, (list, tuple)):
-            return f"{col} IN ({', '.join(_sql_lit(v) for v in f.value)})"
-        return f"{col} = {_sql_lit(f.value)}"
-    if f.operator == "NotEqual":
-        if isinstance(f.value, (list, tuple)):
-            return f"{col} NOT IN ({', '.join(_sql_lit(v) for v in f.value)})"
-        return f"{col} != {_sql_lit(f.value)}"
+            vals = _values(f"tag filter {f.tag!r} {f.operator}", f.value)
+            neg = "NOT " if f.operator == "NotEqual" else ""
+            return f"{col} {neg}IN ({', '.join(_sql_lit(v) for v in vals)})"
+        op = "=" if f.operator == "Equal" else "!="
+        return f"{col} {op} {_sql_lit(f.value)}"
     if f.operator == "Like":
         return f"{col} LIKE {_sql_lit(_like_pattern(f))}"
     if f.operator == "NotLike":
@@ -1003,7 +823,7 @@ def _agg_sql(spec: NumericAggregation) -> tuple[str, str]:
     p = _sql_lit(spec.parameter)
     v = f"CASE WHEN parameter_id = {p} THEN num_value END"
     t = f"CASE WHEN parameter_id = {p} THEN ts END"
-    name = f"{spec.parameter}_{spec.aggregation.lower()}"
+    name = _sql_ident(f"{spec.parameter}_{spec.aggregation.lower()}")
     agg = spec.aggregation
     if agg == "Mean":
         e = f"ROUND(AVG({v}), 4)"
@@ -1037,7 +857,7 @@ def _str_agg_sql(spec: StringAggregation) -> tuple[str, str]:
     p = _sql_lit(spec.parameter)
     v = f"CASE WHEN parameter_id = {p} THEN str_value END"
     t = f"CASE WHEN parameter_id = {p} THEN ts END"
-    name = f"{spec.parameter}_str_{spec.aggregation.lower()}"
+    name = _sql_ident(f"{spec.parameter}_str_{spec.aggregation.lower()}")
     agg = spec.aggregation
     if agg == "First":
         e = f"arg_min({v}, {t})"
@@ -1054,20 +874,23 @@ def oracle_sql(spec: QuerySpec, pv_sql: str) -> str:
     """DuckDB twin of :func:`evaluate` over the relation ``pv_sql``
     (columns stream_id, ts, parameter_id, num_value, str_value, and
     one ``tag_<name>`` column per tag — the queries/telemetry.py
-    PV_SQL shape)."""
+    PV_SQL shape). Every name is a quoted identifier
+    (:func:`_sql_ident`) and every value a literal (:func:`_sql_lit`)."""
     where = []
     if spec.from_ts is not None:
-        where.append(f"ts >= TIMESTAMP '{spec.from_ts}'")
+        where.append(f"ts >= TIMESTAMP {_sql_lit(spec.from_ts)}")
     if spec.to_ts is not None:
-        where.append(f"ts < TIMESTAMP '{spec.to_ts}'")
+        where.append(f"ts < TIMESTAMP {_sql_lit(spec.to_ts)}")
     if spec.stream_ids is not None:
-        ids = ", ".join(_sql_lit(s) for s in spec.stream_ids)
+        ids = ", ".join(
+            _sql_lit(s) for s in _values("stream_ids", spec.stream_ids)
+        )
         where.append(f"stream_id IN ({ids})")
     for tf in spec.tag_filters:
-        where.append(_tag_predicate_sql(tf, f"tag_{tf.tag}"))
+        where.append(_tag_predicate_sql(tf, _sql_ident(f"tag_{tf.tag}")))
     where_sql = (" WHERE " + " AND ".join(where)) if where else ""
 
-    group_cols = [f"tag_{t}" for t in spec.group_by_tags]
+    group_cols = [_sql_ident(f"tag_{t}") for t in spec.group_by_tags]
 
     raw_numeric = [a for a in spec.numeric_aggregations if a.aggregation == "None"]
     raw_string = [a for a in spec.string_aggregations if a.aggregation == "None"]
@@ -1088,11 +911,11 @@ def oracle_sql(spec: QuerySpec, pv_sql: str) -> str:
         psql = ", ".join(_sql_lit(p) for p in params)
         cols = ["ts"] + group_cols + [
             f"CASE WHEN parameter_id = {_sql_lit(a.parameter)}"
-            f" THEN num_value END AS {a.parameter}_none"
+            f" THEN num_value END AS {_sql_ident(a.parameter + '_none')}"
             for a in raw_numeric
         ] + [
             f"CASE WHEN parameter_id = {_sql_lit(a.parameter)}"
-            f" THEN str_value END AS {a.parameter}_str_none"
+            f" THEN str_value END AS {_sql_ident(a.parameter + '_str_none')}"
             for a in raw_string
         ]
         pred = f"parameter_id IN ({psql})"
@@ -1120,7 +943,7 @@ def oracle_sql(spec: QuerySpec, pv_sql: str) -> str:
         dur = spec.group_by_time.duration
         if 86_400_000_000 % _duration_us(dur):
             raise ValueError(f"duration {dur!r} must divide 24h evenly")
-        sel_keys.append(f"time_bucket(INTERVAL '{dur}', ts) AS bucket")
+        sel_keys.append(f"time_bucket(INTERVAL {_sql_lit(dur)}, ts) AS bucket")
     sel_keys += group_cols
     all_exprs = num_exprs + str_exprs
     gb = (
@@ -1140,12 +963,11 @@ def oracle_sql(spec: QuerySpec, pv_sql: str) -> str:
     # interpolation: dense (bucket x tag-group) spine, LEFT JOIN, fill
     if spec.from_ts is None or spec.to_ts is None:
         raise ValueError("interpolation requires from_ts and to_ts")
-    dur = gbt.duration
+    dur = f"INTERVAL {_sql_lit(gbt.duration)}"
     keys = ["bucket"] + group_cols
     spine = (
-        f"SELECT unnest(generate_series(TIMESTAMP '{spec.from_ts}', "
-        f"TIMESTAMP '{spec.to_ts}' - INTERVAL '{dur}', "
-        f"INTERVAL '{dur}')) AS bucket"
+        f"SELECT unnest(generate_series(TIMESTAMP {_sql_lit(spec.from_ts)}, "
+        f"TIMESTAMP {_sql_lit(spec.to_ts)} - {dur}, {dur})) AS bucket"
     )
     if group_cols:
         spine = (
@@ -1182,31 +1004,33 @@ def oracle_sql(spec: QuerySpec, pv_sql: str) -> str:
             spec,
         )
     if gbt.interpolation == "Linear":
+        # helper columns are numbered, not derived from the value
+        # column's name, so no user name is spliced into them
         w_cols = []
-        for c in num_cols:
+        for i, c in enumerate(num_cols):
             w_cols += [
                 f"last_value({c} IGNORE NULLS) OVER ({part}ORDER BY bucket"
                 f" ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-                f" AS {c}_pv",
+                f" AS _pv{i}",
                 f"first_value({c} IGNORE NULLS) OVER ({part}ORDER BY bucket"
                 f" ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
-                f" AS {c}_nv",
+                f" AS _nv{i}",
                 f"last_value(CASE WHEN {c} IS NOT NULL THEN epoch_us(bucket)"
                 f" END IGNORE NULLS) OVER ({part}ORDER BY bucket"
                 f" ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-                f" AS {c}_pb",
+                f" AS _pb{i}",
                 f"first_value(CASE WHEN {c} IS NOT NULL THEN epoch_us(bucket)"
                 f" END IGNORE NULLS) OVER ({part}ORDER BY bucket"
                 f" ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
-                f" AS {c}_nb",
+                f" AS _nb{i}",
             ]
         fill = [
             f"CASE WHEN {c} IS NOT NULL THEN {c}"
-            f" WHEN {c}_pv IS NULL OR {c}_nv IS NULL THEN NULL"
-            f" ELSE ROUND({c}_pv + ({c}_nv - {c}_pv) *"
-            f" CAST(epoch_us(bucket) - {c}_pb AS DOUBLE) /"
-            f" CAST({c}_nb - {c}_pb AS DOUBLE), 4) END AS {c}"
-            for c in num_cols
+            f" WHEN _pv{i} IS NULL OR _nv{i} IS NULL THEN NULL"
+            f" ELSE ROUND(_pv{i} + (_nv{i} - _pv{i}) *"
+            f" CAST(epoch_us(bucket) - _pb{i} AS DOUBLE) /"
+            f" CAST(_nb{i} - _pb{i} AS DOUBLE), 4) END AS {c}"
+            for i, c in enumerate(num_cols)
         ]
         return _order_page_sql(
             base
@@ -1225,7 +1049,8 @@ def _order_page_sql(sql: str, spec: QuerySpec) -> str:
             raise ValueError("paging requires orderings for determinism")
         return sql
     keys = ", ".join(
-        f"{o.by} {'DESC NULLS LAST' if o.direction == 'Desc' else 'ASC NULLS FIRST'}"
+        f"{_sql_ident(o.by)} "
+        f"{'DESC NULLS LAST' if o.direction == 'Desc' else 'ASC NULLS FIRST'}"
         for o in spec.orderings
     )
     sql = f"SELECT * FROM ({sql}) ORDER BY {keys}"
