@@ -11,8 +11,9 @@ from pyspark.sql import functions as F
 from ts_data_pipeline_spark.operators import catalog as cat
 from ts_data_pipeline_spark.plans import snippets as snip
 from ts_data_pipeline_spark.plans.queryspec import (
-    EventQuerySpec, NumericAggregation, QuerySpec, TagFilter, evaluate,
-    evaluate_events, oracle_sql, tag_values,
+    EventQuerySpec, GroupByTime, NumericAggregation, Ordering, QuerySpec,
+    TagFilter, evaluate, evaluate_events, interpolate_finals, oracle_sql,
+    tag_values,
 )
 
 
@@ -192,6 +193,43 @@ def test_empty_value_lists_rejected_by_name(spark):
                   "exclude_levels"):
         with pytest.raises(ValueError, match=field):
             evaluate_events(ev, EventQuerySpec(**{field: []}))
+
+@pytest.mark.parametrize("path", ["evaluate", "interpolate_finals", "oracle_sql"])
+@pytest.mark.parametrize(
+    "field,bad", [("interpolation", "Lineer"), ("direction", "desc")]
+)
+def test_misspelled_modes_rejected_by_name(spark, path, field, bad):
+    """A mode outside its enum is a ValueError naming the bad value on
+    every path. Before, a misspelled interpolation ran as an unfilled
+    spine join in ``evaluate`` and ``interpolate_finals`` while the
+    oracle raised, and a lower-case ``desc`` sorted ascending on both
+    the Spark and the oracle side."""
+    pv = spark.createDataFrame(
+        [("1", "2024-01-01 00:00:00", "purchase", 1.0, {"k": "a"})],
+        "stream_id string, ts_s string, parameter_id string, "
+        "num_value double, tags map<string,string>",
+    ).withColumn("ts", F.col("ts_s").cast("timestamp"))
+
+    def spec(interpolation="Null", direction="Asc"):
+        return QuerySpec(
+            numeric_aggregations=[NumericAggregation("purchase", "Sum")],
+            from_ts="2024-01-01 00:00:00",
+            to_ts="2024-01-01 00:05:00",
+            group_by_time=GroupByTime("1 minute", interpolation),
+            orderings=[Ordering("bucket", direction)],
+        )
+
+    finals = evaluate(pv, spec(interpolation="None"))
+    run = {
+        "evaluate": lambda spec: evaluate(pv, spec),
+        "interpolate_finals": lambda spec: interpolate_finals(finals, spec),
+        "oracle_sql": lambda spec: oracle_sql(spec, "pv"),
+    }[path]
+
+    run(spec())  # the well-spelled spec builds on this path
+    with pytest.raises(ValueError, match=f"{field} '{bad}'"):
+        run(spec(**{field: bad}))
+
 
 def test_snippet_listing_filters(spark):
     c = snip.snippets_catalog(spark)

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from tests.test_streaming import TRADE_SCHEMA, _trade, _write_chunk
@@ -213,67 +212,3 @@ def test_push_hub_as_streaming_sink(spark, tmp_path):
     flat = [v for d in seen for v in d["num_value"]]
     assert sorted(flat) == [5.0, 7.0]
 
-
-def test_tws_processor_matches_old_api_finals(spark, tmp_path):
-    """The transformWithStateInPandas (Spark 4 StatefulProcessor)
-    re-expression must emit byte-identical finals to the
-    applyInPandasWithState path on the same chunked replay —
-    including the timer-driven flush for a key with no further input
-    (B's 10:10 window closes only via the event-time timer when A's
-    later data advances the watermark).
-
-    ENV-GATED like the JVM Avro connector: TWS's state protocol
-    needs google.protobuf, absent from this sandbox (no pip). The
-    processor code is complete; this pin runs wherever protobuf
-    exists."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas state protocol needs protobuf",
-    )
-    from ts_data_pipeline_spark.streaming import tws
-
-    data_dir = str(tmp_path / "data")
-    _write_chunk(spark, [
-        _trade("A", "2024-01-01 10:00:10", premium=5.0),
-        _trade("A", "2024-01-01 10:00:50", premium=7.0),
-        _trade("B", "2024-01-01 10:00:30", premium=2.5),
-    ], data_dir)
-    _write_chunk(spark, [_trade("A", "2024-01-01 10:02:30", premium=11.0)], data_dir)
-    _write_chunk(spark, [_trade("B", "2024-01-01 10:10:00", premium=13.0)], data_dir)
-    _write_chunk(spark, [
-        _trade("A", "2024-01-01 10:00:30", premium=999.0),  # late -> dropped
-        _trade("A", "2024-01-01 10:11:00", premium=17.0),
-        _trade("A", "2024-01-01 10:20:00", premium=1.0),
-    ], data_dir)
-
-    def run(factory, name, ckpt):
-        stream = windowed.parquet_stream(
-            spark, data_dir, TRADE_SCHEMA, max_files=1
-        )
-        agg = factory(
-            stream,
-            _initializer,
-            _reducer,
-            value_fields=(("trade_count", "long"),
-                          ("premium_sum", "double")),
-        )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return {
-            (r.window_start.isoformat(), r.osym):
-                (r.trade_count, r.premium_sum)
-            for r in spark.table(name).collect()
-        }
-
-    old = run(custom_state.keyed_window_reduce, "t_old_api", "ck_old")
-    new = run(tws.tws_keyed_window_reduce, "t_tws_api", "ck_tws")
-    assert new == old and len(new) > 0, (old, new)
-    # the timer-flushed window is present
-    assert ("2024-01-01T10:10:00", "B") in new

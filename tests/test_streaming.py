@@ -591,6 +591,76 @@ def test_streaming_funnel_matches_batch_verdicts(spark, tmp_path):
     assert got[0][0] and got[6][0] is False and got[1][0] is False
 
 
+def test_streaming_funnel_resumes_from_checkpoint(spark, tmp_path):
+    """A CEP query stopped after the first half of a replay and
+    restarted on the same checkpoint emits, across both runs, exactly
+    the rows of one uninterrupted run: open from-events, their
+    witnesses and the timeout armed for them survive the restart
+    through the operator's JSON state. Uses the (fault-tolerant) file
+    sink: the memory sink cannot recover."""
+    import datetime as dt
+
+    from ts_data_pipeline_spark.streaming import cep
+
+    schema = T.StructType([
+        T.StructField("event_id", T.LongType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("event_type", T.StringType()),
+    ])
+    base = dt.datetime(2024, 1, 1, 10, 0)
+    m = lambda k: base + dt.timedelta(minutes=k)
+    # One file per run; u2 view@8 and u3 view@9 are still open when
+    # the first run stops.
+    first = [
+        (0, 1, m(0), "view"), (1, 2, m(1), "view"), (2, 1, m(3), "purchase"),
+        (3, 2, m(8), "view"), (4, 3, m(9), "view"), (5, 9, m(10), "click"),
+    ]
+    # u2 converts from state; u3 gets no more data and is decided by
+    # the timeout armed before the restart; u4's purchase lands past
+    # its 5-minute horizon.
+    second = [
+        (6, 2, m(12), "purchase"), (7, 4, m(18), "view"),
+        (8, 4, m(30), "purchase"), (9, 9, m(40), "click"),
+    ]
+    data_dir = str(tmp_path / "data")
+
+    def write(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(data_dir)
+
+    def run(name):
+        stream = windowed.parquet_stream(spark, data_dir, schema, max_files=1)
+        q = (
+            cep.streaming_funnel(stream, "view", "purchase", 5)
+            .writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", str(tmp_path / name / "out"))
+            .option("checkpointLocation", str(tmp_path / name / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return {
+            (r.event_id, r.key, r.ts, r.converted_at, r.converted)
+            for r in spark.read.parquet(str(tmp_path / name / "out")).collect()
+        }
+
+    write(first)
+    before = run("resumed")
+    write(second)
+    resumed = run("resumed")
+    one_shot = run("one_shot")
+
+    assert resumed == one_shot
+    assert {r[0] for r in before} == {0, 1}
+    assert {r[0]: (r[4], r[3]) for r in resumed} == {
+        0: (True, m(3)), 1: (False, None), 3: (True, m(12)),
+        4: (False, None), 7: (False, None),
+    }
+
+
 def test_streaming_zscore_alerts_match_batch(spark, tmp_path):
     """Streaming z-score alerting: emitted anomalies must equal the
     batch rolling_zscore_anomalies rows (same ids, same 4-dp z) over

@@ -22,19 +22,6 @@ WHALE_THRESHOLD = 250_000.0
 MILLIONAIRE_THRESHOLD = 1_000_000.0
 
 
-def side_from_tags(tags: Column) -> Column:
-    """P2 — side derivation from tag membership.
-
-    ``'buy' if 'ask_side' in tags else 'sell' if 'bid_side' in tags
-    else 'no_side'`` (/root/reference/option_trades/utils.py:124).
-    """
-    return (
-        F.when(F.array_contains(tags, "ask_side"), F.lit("buy"))
-        .when(F.array_contains(tags, "bid_side"), F.lit("sell"))
-        .otherwise(F.lit("no_side"))
-    )
-
-
 def position_type(tags: Column, otype: Column) -> Column:
     """P3 — position-type tag: long_/short_/neutral_/no_side_ + otype.
 
@@ -70,27 +57,6 @@ def premium_bucket_tags(premium: Column,
             F.when(premium > large, F.lit("large_trade")),
             F.when((premium > whale) & (premium <= millionaire), F.lit("whale")),
             F.when(premium > millionaire, F.lit("millionaire")),
-        )
-    )
-
-
-def days_to_expiry(expiration_date: Column, event_ts: Column) -> Column:
-    """P5 — days-to-expiry: datediff(expiry, date(executed_at)).
-
-    /root/reference/option_trades/utils.py:102-104.
-    """
-    return F.datediff(F.to_date(expiration_date), F.to_date(event_ts))
-
-
-def expiry_tags(dtx: Column) -> Column:
-    """P5 — expires_today (<=0) / expires_soon (<=7) tags.
-
-    /root/reference/option_trades/utils.py:105-109.
-    """
-    return F.array_compact(
-        F.array(
-            F.when(dtx <= 0, F.lit("expires_today")),
-            F.when((dtx > 0) & (dtx <= 7), F.lit("expires_soon")),
         )
     )
 
@@ -161,41 +127,3 @@ def deterministic_key(*parts: Column) -> Column:
     /root/reference/darkpool_trades/main.py:88-92.
     """
     return F.sha2(F.concat_ws("", *[p.cast("string") for p in parts]), 256)
-
-
-def trade_value(price: Column, qty: Column) -> Column:
-    """P12 — trade value = price * qty (DecimalType-safe).
-
-    /root/reference/darkpool_trades/main.py:97-99.
-    """
-    return price * qty
-
-
-def to_eastern(ts: Column) -> Column:
-    """P13 — timezone conversion to US Eastern at the display edge.
-
-    /root/reference/darkpool_trades/main.py:45,96.
-    """
-    return F.from_utc_timestamp(ts, "America/New_York")
-
-
-def event_time_ms(ts_ms: Column) -> Column:
-    """P14 — epoch-ms -> event-time TimestampType column.
-
-    Timestamp extractors across all services pull value["ts"] (ms):
-    /root/reference/option_trades/utils.py:41-63,
-    option_trade_aggs/main.py:20-29, equity_quotes/main.py:39-40.
-    """
-    return F.timestamp_millis(ts_ms.cast("long"))
-
-
-def message_headers(**constants: str) -> Column:
-    """P16 — constant message-header map enrichment.
-
-    /root/reference/option_trades/utils.py:187-190 (data_provider,
-    integration_id headers); news/main.py:63-67.
-    """
-    pairs = []
-    for k, v in constants.items():
-        pairs.extend([F.lit(k), F.lit(v)])
-    return F.create_map(*pairs)

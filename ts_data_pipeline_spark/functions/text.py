@@ -16,11 +16,6 @@ from pyspark.sql import functions as F
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "for")
 
 
-def token_count(text: Column) -> Column:
-    """Whitespace token count (empties removed)."""
-    return F.size(F.filter(F.split(F.lower(text), " "), lambda t: t != ""))
-
-
 def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document quality/feature vector.
 

@@ -106,14 +106,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     else:
         df = spark.read.schema(schema).parquet(path)
     return normalize_timestamps(df, table=name)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every synthetic table; keys match DuckDB oracle views."""
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view for spark.sql queries."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

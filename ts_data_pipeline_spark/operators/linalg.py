@@ -85,21 +85,6 @@ GROUP BY i1, j.range
 """
 
 
-def mean_vector(emb: DataFrame, vec_col: str = "embedding",
-                dim: int = 64) -> list[float]:
-    """Column means, one dimension-bounded aggregate (d doubles to
-    the driver — sketch-sized)."""
-    row = emb.agg(
-        *[
-            F.avg(F.element_at(vec_col, j + 1).cast("double")).alias(
-                f"m{j}"
-            )
-            for j in range(dim)
-        ]
-    ).collect()[0]
-    return [row[f"m{j}"] for j in range(dim)]
-
-
 def pca_components(
     emb: DataFrame,
     vec_col: str = "embedding",

@@ -1218,20 +1218,6 @@ def embedding_cosine_dups(
     )
 
 
-def embedding_cosine_dups_sql(threshold: float = 0.45) -> str:
-    return f"""
-WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-pairs AS (
-  SELECT a.vec_id AS ia, b.vec_id AS ib,
-         ROUND(list_dot_product(a.v, b.v) /
-               (sqrt(list_dot_product(a.v, a.v)) *
-                sqrt(list_dot_product(b.v, b.v))), 6) AS cos_sim
-  FROM emb a JOIN emb b ON a.vec_id < b.vec_id
-)
-SELECT ia, ib, cos_sim FROM pairs WHERE cos_sim >= {threshold}
-"""
-
-
 def embedding_cosine_dups_bucketed(
     embeddings: DataFrame,
     plane_ids: list[int],
@@ -2714,28 +2700,6 @@ def _pq_cb_trained(
         )
     schema = cb.schema
     return embeddings.sparkSession.createDataFrame(cb.collect(), schema)
-
-
-def pq_train_codebook(
-    embeddings: DataFrame,
-    codebook_ids: list[int],
-    m: int = 8,
-    dsub: int = 8,
-    train_iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Public train-once entry point: the Lloyd-trained (sub, cid,
-    cv) codebook relation, with the SAME m/dsub defaults as
-    :func:`pq_topk` / :func:`ivfpq_topk`. Callers sharing one
-    codebook across several searches (e.g. the pq + ivfpq suite legs)
-    train here once and pass the result via their ``codebook``
-    parameter — hard-coding the subspace shape at call sites risks
-    silently training a mismatched codebook if the defaults ever
-    move."""
-    return _pq_cb_trained(
-        embeddings, codebook_ids, m, dsub, id_col, vec_col, train_iters
-    )
 
 
 def _pq_enc_from(rows: DataFrame, cb: DataFrame, m: int, dsub: int,

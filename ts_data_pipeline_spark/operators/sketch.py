@@ -1065,15 +1065,3 @@ def distinct_count_estimate(state: DataFrame) -> DataFrame:
     return state.select(
         "*", F.hll_sketch_estimate("hll").alias("n_distinct_est")
     )
-
-
-def distinct_count_state_sink(
-    path: str, key_cols: list[str], value_col: str = "value", lgk: int = 12
-):
-    """foreachBatch body maintaining per-key distinct-count sketches
-    (see :func:`state_sink` for the commit protocol)."""
-    return state_sink(
-        path,
-        lambda b: distinct_count_state(b, key_cols, value_col, lgk),
-        lambda a, b: merge_distinct_states(a, b, key_cols),
-    )

@@ -70,6 +70,16 @@ EVENT_AGGS = ("None", "First", "Last", "Count")
 #: eventLevel.ts:16
 EVENT_LEVELS = ("Trace", "Debug", "Information", "Warning", "Error", "Critical")
 
+#: ordering.ts:17-23
+DIRECTIONS = ("Asc", "Desc")
+
+
+def _check_mode(field: str, value: str, allowed: Sequence[str]) -> None:
+    """Reject a mode outside its enum when the spec is built, so the
+    Spark, streaming and oracle paths never each guess at one."""
+    if value not in allowed:
+        raise ValueError(f"unsupported {field} {value!r}; expected one of {allowed}")
+
 
 @dataclass
 class TagFilter:
@@ -109,13 +119,19 @@ class GroupByTime:
     duration: str  # e.g. "15 minutes" — must divide 24h evenly
     interpolation: str = "None"
 
+    def __post_init__(self) -> None:
+        _check_mode("interpolation", self.interpolation, INTERPOLATIONS)
+
 
 @dataclass
 class Ordering:
     """ordering.ts:17-23."""
 
     by: str
-    direction: str = "Asc"  # Asc | Desc
+    direction: str = "Asc"
+
+    def __post_init__(self) -> None:
+        _check_mode("direction", self.direction, DIRECTIONS)
 
 
 @dataclass
@@ -1003,42 +1019,41 @@ def oracle_sql(spec: QuerySpec, pv_sql: str) -> str:
             base + f"SELECT {', '.join(keys + filled + str_cols)} FROM j",
             spec,
         )
-    if gbt.interpolation == "Linear":
-        # helper columns are numbered, not derived from the value
-        # column's name, so no user name is spliced into them
-        w_cols = []
-        for i, c in enumerate(num_cols):
-            w_cols += [
-                f"last_value({c} IGNORE NULLS) OVER ({part}ORDER BY bucket"
-                f" ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-                f" AS _pv{i}",
-                f"first_value({c} IGNORE NULLS) OVER ({part}ORDER BY bucket"
-                f" ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
-                f" AS _nv{i}",
-                f"last_value(CASE WHEN {c} IS NOT NULL THEN epoch_us(bucket)"
-                f" END IGNORE NULLS) OVER ({part}ORDER BY bucket"
-                f" ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-                f" AS _pb{i}",
-                f"first_value(CASE WHEN {c} IS NOT NULL THEN epoch_us(bucket)"
-                f" END IGNORE NULLS) OVER ({part}ORDER BY bucket"
-                f" ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
-                f" AS _nb{i}",
-            ]
-        fill = [
-            f"CASE WHEN {c} IS NOT NULL THEN {c}"
-            f" WHEN _pv{i} IS NULL OR _nv{i} IS NULL THEN NULL"
-            f" ELSE ROUND(_pv{i} + (_nv{i} - _pv{i}) *"
-            f" CAST(epoch_us(bucket) - _pb{i} AS DOUBLE) /"
-            f" CAST(_nb{i} - _pb{i} AS DOUBLE), 4) END AS {c}"
-            for i, c in enumerate(num_cols)
+    # Linear (GroupByTime rejects any other mode when it is built):
+    # helper columns are numbered, not derived from the value
+    # column's name, so no user name is spliced into them
+    w_cols = []
+    for i, c in enumerate(num_cols):
+        w_cols += [
+            f"last_value({c} IGNORE NULLS) OVER ({part}ORDER BY bucket"
+            f" ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+            f" AS _pv{i}",
+            f"first_value({c} IGNORE NULLS) OVER ({part}ORDER BY bucket"
+            f" ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
+            f" AS _nv{i}",
+            f"last_value(CASE WHEN {c} IS NOT NULL THEN epoch_us(bucket)"
+            f" END IGNORE NULLS) OVER ({part}ORDER BY bucket"
+            f" ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+            f" AS _pb{i}",
+            f"first_value(CASE WHEN {c} IS NOT NULL THEN epoch_us(bucket)"
+            f" END IGNORE NULLS) OVER ({part}ORDER BY bucket"
+            f" ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
+            f" AS _nb{i}",
         ]
-        return _order_page_sql(
-            base
-            + f", w AS (SELECT j.*, {', '.join(w_cols)} FROM j)\n"
-            + f"SELECT {', '.join(keys + fill + str_cols)} FROM w",
-            spec,
-        )
-    raise ValueError(f"unsupported interpolation {gbt.interpolation!r}")
+    fill = [
+        f"CASE WHEN {c} IS NOT NULL THEN {c}"
+        f" WHEN _pv{i} IS NULL OR _nv{i} IS NULL THEN NULL"
+        f" ELSE ROUND(_pv{i} + (_nv{i} - _pv{i}) *"
+        f" CAST(epoch_us(bucket) - _pb{i} AS DOUBLE) /"
+        f" CAST(_nb{i} - _pb{i} AS DOUBLE), 4) END AS {c}"
+        for i, c in enumerate(num_cols)
+    ]
+    return _order_page_sql(
+        base
+        + f", w AS (SELECT j.*, {', '.join(w_cols)} FROM j)\n"
+        + f"SELECT {', '.join(keys + fill + str_cols)} FROM w",
+        spec,
+    )
 
 
 def _order_page_sql(sql: str, spec: QuerySpec) -> str:

@@ -24,7 +24,7 @@ broadcast/window work on aggregated relations.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -716,12 +716,3 @@ SELECT s.doc_id, s.lang, s.text_norm,
        CAST(p.tokens AS BIGINT) AS tokens, p.tok_offset, p.chunk_id
 FROM shuffled s JOIN packed p USING (pos)
 """
-
-
-def corpus_report(spark: SparkSession, out: DataFrame) -> DataFrame:
-    """Per-language yield of the recipe: docs, tokens, chunks."""
-    return out.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("tokens").alias("tokens"),
-        F.count_distinct("chunk_id").alias("chunks_touched"),
-    )

@@ -1,16 +1,22 @@
 """Streaming CEP twins of the batch alerting operators: funnel
-(A-followed-by-B within a horizon), rolling z-score anomalies, and
-CUSUM drift — the "conversion tracking", "live alert escalation",
-and "drift monitoring" primitives, as stateful Structured Streaming
-operators.
+(A-followed-by-B within a horizon), multi-stage funnel path, rolling
+z-score anomalies, CUSUM drift and the heartbeat dead-man's switch —
+the "conversion tracking", "live alert escalation", and "drift
+monitoring" primitives, as stateful Structured Streaming operators.
 
-Both follow the engine's established stateful pattern
-(streaming/custom_state.py): ``applyInPandasWithState`` keyed on the
-entity, event-time watermark for lateness, buffer-until-final
-emission, and an event-time timeout so finals flush when the
-watermark advances without new per-key data. The batch operators
+Every operator here is a decision step on the engine's one keyed
+event-time state driver (streaming/custom_state._keyed_event_time_state):
+the driver keys on the entity, applies the watermark, stores the
+step's JSON state and arms the event-time timeout at the ``wake_us``
+the step returns, so finals flush when the watermark advances
+without new per-key data. A step sees each record with its event
+time in MICROSECONDS: the batch twins order by the full timestamp,
+so the ms-grain watermark must never truncate an ordering key.
+Stored states carry a ``"u": "us"`` tag; the funnel and z-score
+convert an untagged (ms-era) checkpoint on load instead of
+reinterpreting ms ints as µs. The batch operators
 (operators/tsstats.funnel_conversions, operators/quality.
-rolling_zscore_anomalies) are the oracles: tests/test_streaming.py
+rolling_zscore_anomalies, ...) are the oracles: tests/test_streaming.py
 pins that every emitted final byte-matches the batch computation of
 the same input over the finalized region.
 
@@ -24,8 +30,9 @@ Emission contracts (what a stream CAN finalize):
   reports the unbounded next to-event for non-conversions, which no
   finite-state stream can finalize (it may lie arbitrarily far in
   the future). The conversion verdict itself is identical.
-- ``streaming_zscore_alerts`` finalizes rows strictly below the
-  watermark in (ts, id) order, maintaining the trailing ``lookback``
+- ``streaming_zscore_alerts`` and ``streaming_cusum_alerts``
+  finalize rows strictly below the watermark in (ts, id) order
+  (:func:`_due_rows`); the z-score keeps the trailing ``lookback``
   values per key — the same preceding-rows-only baseline as the
   batch window frame (the current point never contaminates its own
   baseline). Rows arriving after their position was finalized are
@@ -45,24 +52,40 @@ feature, not the arithmetic).
 from __future__ import annotations
 
 import bisect
-import json
 import math
-from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_STATE_SCHEMA = T.StructType([T.StructField("js", T.StringType())])
+from ts_data_pipeline_spark.streaming.custom_state import _keyed_event_time_state
 
 
-def _arm_timeout(state: GroupState, want_ms: int, wm: int) -> None:
-    """Event-time timeouts must be strictly above the watermark, and
-    fire only when the watermark strictly exceeds them — arm 1 ms
-    early (same boundary reasoning as custom_state.py) and clamp."""
-    state.setTimeoutTimestamp(max(want_ms - 1, wm + 1))
+def _schema(*fields: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in fields])
+
+
+def _due_rows(buf, records, wm, id_col, value_col):
+    """Add this call's on-time records to ``buf`` as (ts_us, id,
+    value) and split it at the watermark: ``(due, pending)``, due
+    being every row strictly below ``wm`` in (ts, id) order.
+
+    NULL and NaN values both become None, not NaN: the batch frame
+    counts a null row as a SLOT in its trailing window but excludes it
+    from count/avg/std/sum (Spark aggregates skip nulls) — a NaN would
+    instead poison every statistic it touches."""
+    for ts_us, rec in records:
+        if ts_us < wm:
+            continue  # position already finalized: late, drop
+        raw = rec[value_col]
+        val = (
+            None
+            if raw is None or (isinstance(raw, float) and math.isnan(raw))
+            else float(raw)
+        )
+        buf.append((ts_us, int(rec[id_col]), val))
+    buf.sort(key=lambda p: (p[0], p[1]))
+    return [p for p in buf if p[0] < wm], [p for p in buf if p[0] >= wm]
 
 
 def streaming_funnel(
@@ -87,31 +110,16 @@ def streaming_funnel(
     first to-event strictly after the from-event in (ts, id) order.
     """
     within_us = within_minutes * 60_000_000
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("key", T.StringType()),
-            T.StructField(ts_col, T.TimestampType()),
-            T.StructField("converted_at", T.TimestampType()),
-            T.StructField("converted", T.BooleanType()),
-        ]
+    out_schema = _schema(
+        (id_col, T.LongType()),
+        ("key", T.StringType()),
+        (ts_col, T.TimestampType()),
+        ("converted_at", T.TimestampType()),
+        ("converted", T.BooleanType()),
     )
 
-    def fold(
-        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = (
-            json.loads(state.get[0])
-            if state.exists
-            else {"u": "us", "froms": [], "tos": []}
-        )
-        # All event times are kept at MICROSECOND precision (the
-        # batch operator orders by the full timestamp; truncating to
-        # the watermark's ms grain would reorder sub-ms neighbors and
-        # change baselines/matches). Only the watermark itself is ms.
-        # The "u" tag versions the state format: a checkpoint written
-        # by the earlier ms-grain code is converted on load instead
-        # of silently reinterpreting ms ints as us (1970-era times).
+    def step(key, st, records, wm):
+        st = st or {"u": "us", "froms": [], "tos": []}
         scale = 1 if st.get("u") == "us" else 1000
         froms = [(i, t * scale) for i, t in st["froms"]]  # [(id, ts_us)]
         # witnesses are kept as a (ts, id) list that is sorted ONCE
@@ -125,19 +133,13 @@ def streaming_funnel(
         # O(A·T) list shifting). The stored layout stays [(id, ts)]
         # for checkpoint compatibility.
         tos = [(t * scale, i) for i, t in st["tos"]]  # [(ts_us, id)]
-        wm = state.getCurrentWatermarkMs() * 1000  # us
-        for pdf in pdfs:
-            for rec in pdf.to_dict("records"):
-                ts_us = int(rec[ts_col].value // 1_000)
-                rid = int(rec[id_col])
-                if rec[type_col] == from_event:
-                    if ts_us + within_us < wm:
-                        continue  # horizon STRICTLY passed: late, drop
-                    froms.append((rid, ts_us))
-                elif rec[type_col] == to_event:
-                    if ts_us + within_us < wm:
-                        continue  # can no longer convert any open from
-                    tos.append((ts_us, rid))
+        for ts_us, rec in records:
+            if ts_us + within_us < wm:
+                continue  # horizon STRICTLY passed: late, drop
+            if rec[type_col] == from_event:
+                froms.append((int(rec[id_col]), ts_us))
+            elif rec[type_col] == to_event:
+                tos.append((ts_us, int(rec[id_col])))
         tos.sort()
         # decide every from whose horizon the watermark has passed;
         # the to-events it may match are still in state (their evict
@@ -166,7 +168,7 @@ def streaming_funnel(
             rows.append(
                 {
                     id_col: fid,
-                    "key": key[0],
+                    "key": key,
                     ts_col: pd.Timestamp(fts, unit="us"),
                     "converted_at": (
                         pd.Timestamp(hit[0], unit="us") if hit else pd.NaT
@@ -175,35 +177,15 @@ def streaming_funnel(
                 }
             )
         keep_tos = [(tid, tts) for tts, tid in tos if tts + within_us >= wm]
-        if still_open or keep_tos:
-            horizons = [fts + within_us for _, fts in still_open] + [
-                tts + within_us for _, tts in keep_tos
-            ]
-            state.update(
-                (json.dumps({"u": "us", "froms": still_open,
-                             "tos": keep_tos}),)
-            )
-            # arm at the horizon's floor-ms + 1 (then _arm_timeout's
-            # -1 sets exactly floor(h/1000)): event-time timeouts fire
-            # when the watermark STRICTLY exceeds the set instant, so
-            # this fires at the first watermark that STRICTLY passes
-            # the horizon — matching the strict decision rule
-            _arm_timeout(state, min(horizons) // 1000 + 1, wm // 1000)
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(rows, columns=list(out_schema.fieldNames()))
+        if not (still_open or keep_tos):
+            return rows, None, None
+        # wake at the first watermark STRICTLY past the nearest
+        # horizon — the strict decision (and eviction) rule above
+        wake = min(t for _, t in still_open + keep_tos) + within_us
+        return rows, {"u": "us", "froms": still_open, "tos": keep_tos}, wake
 
-    return (
-        events.withWatermark(ts_col, grace)
-        .withColumn("_key", F.col(key_col).cast("string"))
-        .groupBy("_key")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_event_time_state(
+        events, step, out_schema, key_col=key_col, ts_col=ts_col, grace=grace
     )
 
 
@@ -228,59 +210,23 @@ def streaming_zscore_alerts(
     (sample stddev over the preceding <=lookback rows, >= min_history
     required, z rounded 4 dp) — pinned in tests/test_streaming.py.
     """
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("key", T.StringType()),
-            T.StructField(ts_col, T.TimestampType()),
-            T.StructField(value_col, T.DoubleType()),
-            T.StructField("n_hist", T.LongType()),
-            T.StructField("z", T.DoubleType()),
-        ]
+    out_schema = _schema(
+        (id_col, T.LongType()),
+        ("key", T.StringType()),
+        (ts_col, T.TimestampType()),
+        (value_col, T.DoubleType()),
+        ("n_hist", T.LongType()),
+        ("z", T.DoubleType()),
     )
 
-    def fold(
-        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = (
-            json.loads(state.get[0])
-            if state.exists
-            else {"u": "us", "buf": [], "hist": []}
-        )
-        # microsecond event times (see the funnel note: the batch
-        # twin orders by the full timestamp, so the ms-grain watermark
-        # must not truncate the ordering key); "u" tags the state
-        # format so a ms-era checkpoint converts instead of being
-        # reinterpreted
+    def step(key, st, records, wm):
+        st = st or {"u": "us", "buf": [], "hist": []}
         scale = 1 if st.get("u") == "us" else 1000
         buf = [(t * scale, i, v) for t, i, v in st["buf"]]
         hist = [(t * scale, i, v) for t, i, v in st["hist"]]
-        wm = state.getCurrentWatermarkMs() * 1000  # us
-        for pdf in pdfs:
-            for rec in pdf.to_dict("records"):
-                ts_us = int(rec[ts_col].value // 1_000)
-                if ts_us < wm:
-                    continue  # position already finalized: late, drop
-                # NULL values must survive as None, not become NaN:
-                # the batch frame counts a null row as a SLOT in the
-                # trailing window but excludes it from count/avg/std
-                # (Spark aggregates skip nulls) — a NaN would instead
-                # poison mu/sd and silently suppress every alert for
-                # the next `lookback` rows.
-                raw = rec[value_col]
-                val = (
-                    None
-                    if raw is None
-                    or (isinstance(raw, float) and math.isnan(raw))
-                    else float(raw)
-                )
-                buf.append((ts_us, int(rec[id_col]), val))
+        due, pending = _due_rows(buf, records, wm, id_col, value_col)
         rows = []
-        pending = []
-        for ts_us, rid, val in sorted(buf, key=lambda p: (p[0], p[1])):
-            if ts_us >= wm:
-                pending.append((ts_us, rid, val))
-                continue
+        for ts_us, rid, val in due:
             vals = [v for _, _, v in hist[-lookback:] if v is not None]
             n = len(vals)  # == batch count(value) over the row frame
             # n >= 2 mirrors the batch twin exactly: stddev_samp over
@@ -296,7 +242,7 @@ def streaming_zscore_alerts(
                         rows.append(
                             {
                                 id_col: rid,
-                                "key": key[0],
+                                "key": key,
                                 ts_col: pd.Timestamp(ts_us, unit="us"),
                                 value_col: val,
                                 "n_hist": n,
@@ -305,30 +251,13 @@ def streaming_zscore_alerts(
                         )
             hist.append((ts_us, rid, val))
             hist = hist[-lookback:]
-        if pending or hist:
-            state.update(
-                (json.dumps({"u": "us", "buf": pending, "hist": hist}),)
-            )
-            if pending:
-                # wake when the watermark passes the oldest pending row
-                _arm_timeout(
-                    state, min(p[0] for p in pending) // 1000 + 1, wm // 1000
-                )
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(rows, columns=list(out_schema.fieldNames()))
+        if not (pending or hist):
+            return rows, None, None
+        wake = pending[0][0] if pending else None
+        return rows, {"u": "us", "buf": pending, "hist": hist}, wake
 
-    return (
-        events.withWatermark(ts_col, grace)
-        .withColumn("_key", F.col(key_col).cast("string"))
-        .groupBy("_key")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_event_time_state(
+        events, step, out_schema, key_col=key_col, ts_col=ts_col, grace=grace
     )
 
 
@@ -372,52 +301,24 @@ def streaming_cusum_alerts(
     hi = float(target) + float(slack)
     lo = float(target) - float(slack)
     thr = float(threshold)
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("key", T.StringType()),
-            T.StructField(ts_col, T.TimestampType()),
-            T.StructField(value_col, T.DoubleType()),
-            T.StructField("s_pos", T.DoubleType()),
-            T.StructField("s_neg", T.DoubleType()),
-            T.StructField("alarm_pos", T.BooleanType()),
-            T.StructField("alarm_neg", T.BooleanType()),
-        ]
+    out_schema = _schema(
+        (id_col, T.LongType()),
+        ("key", T.StringType()),
+        (ts_col, T.TimestampType()),
+        (value_col, T.DoubleType()),
+        ("s_pos", T.DoubleType()),
+        ("s_neg", T.DoubleType()),
+        ("alarm_pos", T.BooleanType()),
+        ("alarm_neg", T.BooleanType()),
     )
 
-    def fold(
-        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = (
-            json.loads(state.get[0])
-            if state.exists
-            else {"u": "us", "sp": 0.0, "sn": 0.0, "buf": []}
-        )
-        # microsecond event times; "u" tags the state format (see the
-        # funnel note — the ms watermark grain must not truncate the
-        # ordering key)
+    def step(key, st, records, wm):
+        st = st or {"u": "us", "sp": 0.0, "sn": 0.0, "buf": []}
         sp, sn = float(st["sp"]), float(st["sn"])
         buf = [(t, i, v) for t, i, v in st["buf"]]
-        wm = state.getCurrentWatermarkMs() * 1000  # us
-        for pdf in pdfs:
-            for rec in pdf.to_dict("records"):
-                ts_us = int(rec[ts_col].value // 1_000)
-                if ts_us < wm:
-                    continue  # position already finalized: late, drop
-                raw = rec[value_col]
-                val = (
-                    None
-                    if raw is None
-                    or (isinstance(raw, float) and math.isnan(raw))
-                    else float(raw)
-                )
-                buf.append((ts_us, int(rec[id_col]), val))
+        due, pending = _due_rows(buf, records, wm, id_col, value_col)
         rows = []
-        pending = []
-        for ts_us, rid, val in sorted(buf, key=lambda p: (p[0], p[1])):
-            if ts_us >= wm:
-                pending.append((ts_us, rid, val))
-                continue
+        for ts_us, rid, val in due:
             if val is not None:
                 sp = max(0.0, sp + (val - hi))
                 sn = max(0.0, sn + (lo - val))
@@ -425,7 +326,7 @@ def streaming_cusum_alerts(
                 rows.append(
                     {
                         id_col: rid,
-                        "key": key[0],
+                        "key": key,
                         ts_col: pd.Timestamp(ts_us, unit="us"),
                         value_col: val,
                         "s_pos": round(sp, 4),
@@ -434,29 +335,13 @@ def streaming_cusum_alerts(
                         "alarm_neg": sn > thr,
                     }
                 )
-        if pending or sp > 0.0 or sn > 0.0:
-            state.update(
-                (json.dumps({"u": "us", "sp": sp, "sn": sn, "buf": pending}),)
-            )
-            if pending:
-                _arm_timeout(
-                    state, min(p[0] for p in pending) // 1000 + 1, wm // 1000
-                )
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(rows, columns=list(out_schema.fieldNames()))
+        if not (pending or sp > 0.0 or sn > 0.0):
+            return rows, None, None
+        wake = pending[0][0] if pending else None
+        return rows, {"u": "us", "sp": sp, "sn": sn, "buf": pending}, wake
 
-    return (
-        events.withWatermark(ts_col, grace)
-        .withColumn("_key", F.col(key_col).cast("string"))
-        .groupBy("_key")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_event_time_state(
+        events, step, out_schema, key_col=key_col, ts_col=ts_col, grace=grace
     )
 
 
@@ -493,43 +378,30 @@ def streaming_funnel_path(
     """
     if len(stages) < 2:
         raise ValueError("streaming_funnel_path needs at least 2 stages")
-    from bisect import bisect_left
-
     within_us = within_minutes * 60_000_000
     rest = stages[1:]
     stage_cols = [f"ts_{i}_{name}" for i, name in enumerate(rest, 1)]
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("key", T.StringType()),
-            T.StructField(ts_col, T.TimestampType()),
-        ]
-        + [T.StructField(c, T.TimestampType()) for c in stage_cols]
-        + [T.StructField("completed", T.BooleanType())]
+    out_schema = _schema(
+        (id_col, T.LongType()),
+        ("key", T.StringType()),
+        (ts_col, T.TimestampType()),
+        *[(c, T.TimestampType()) for c in stage_cols],
+        ("completed", T.BooleanType()),
     )
 
-    def fold(
-        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = (
-            json.loads(state.get[0])
-            if state.exists
-            else {"u": "us", "starts": [], "stg": [[] for _ in rest]}
-        )
+    def step(key, st, records, wm):
+        st = st or {"u": "us", "starts": [], "stg": [[] for _ in rest]}
         starts = [(i, t) for i, t in st["starts"]]
         stg = [list(map(int, lst)) for lst in st["stg"]]
-        wm = state.getCurrentWatermarkMs() * 1000  # us
-        for pdf in pdfs:
-            for rec in pdf.to_dict("records"):
-                ts_us = int(rec[ts_col].value // 1_000)
-                if ts_us + within_us < wm:
-                    continue  # late beyond every open horizon
-                etype = rec[type_col]
-                if etype == stages[0]:
-                    starts.append((int(rec[id_col]), ts_us))
-                for si, name in enumerate(rest):
-                    if etype == name:
-                        stg[si].append(ts_us)
+        for ts_us, rec in records:
+            if ts_us + within_us < wm:
+                continue  # late beyond every open horizon
+            etype = rec[type_col]
+            if etype == stages[0]:
+                starts.append((int(rec[id_col]), ts_us))
+            for si, name in enumerate(rest):
+                if etype == name:
+                    stg[si].append(ts_us)
         for lst in stg:
             lst.sort()
         rows = []
@@ -542,7 +414,7 @@ def streaming_funnel_path(
             horizon = sts + within_us
             row = {
                 id_col: sid,
-                "key": key[0],
+                "key": key,
                 ts_col: pd.Timestamp(sts, unit="us"),
                 "completed": True,
             }
@@ -550,7 +422,7 @@ def streaming_funnel_path(
             for col, lst in zip(stage_cols, stg):
                 hit = None
                 if prev is not None:
-                    j = bisect_left(lst, prev)  # at-or-after
+                    j = bisect.bisect_left(lst, prev)  # at-or-after
                     if j < len(lst) and lst[j] <= horizon:
                         hit = lst[j]
                 row[col] = (
@@ -564,32 +436,16 @@ def streaming_funnel_path(
         stg = [
             [t for t in lst if t + within_us >= wm] for lst in stg
         ]
-        if still_open or any(stg):
-            horizons = [t + within_us for _, t in still_open] + [
-                t + within_us for lst in stg for t in lst
-            ]
-            state.update(
-                (json.dumps(
-                    {"u": "us", "starts": still_open, "stg": stg}
-                ),)
-            )
-            # strict-firing arm — see streaming_funnel
-            _arm_timeout(state, min(horizons) // 1000 + 1, wm // 1000)
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(rows, columns=list(out_schema.fieldNames()))
+        if not (still_open or any(stg)):
+            return rows, None, None
+        # strict-firing wake — see streaming_funnel
+        wake = min(
+            [t for _, t in still_open] + [t for lst in stg for t in lst]
+        ) + within_us
+        return rows, {"u": "us", "starts": still_open, "stg": stg}, wake
 
-    return (
-        events.withWatermark(ts_col, grace)
-        .withColumn("_key", F.col(key_col).cast("string"))
-        .groupBy("_key")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_event_time_state(
+        events, step, out_schema, key_col=key_col, ts_col=ts_col, grace=grace
     )
 
 
@@ -624,35 +480,21 @@ def streaming_heartbeat_alerts(
     than anything else in this module.
     """
     gap_us = gap_minutes * 60_000_000
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("last_seen", T.TimestampType()),
-            T.StructField("alert", T.BooleanType()),
-        ]
+    out_schema = _schema(
+        ("key", T.StringType()),
+        ("last_seen", T.TimestampType()),
+        ("alert", T.BooleanType()),
     )
 
-    def fold(
-        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = (
-            json.loads(state.get[0])
-            if state.exists
-            else {"u": "us", "last": None, "alerted": False}
-        )
+    def step(key, st, records, wm):
+        st = st or {"u": "us", "last": None, "alerted": False}
         last = st["last"]
         alerted = bool(st["alerted"])
-        wm = state.getCurrentWatermarkMs() * 1000  # us
-        rows = []
+        silences = []
         # fold arrivals in event-time order (a jumbled batch must not
         # fabricate or miss a gap); drop late rows (ts < watermark) —
         # the T2 contract shared with every operator in this module
-        arrivals = sorted(
-            int(rec[ts_col].value // 1_000)
-            for pdf in pdfs
-            for rec in pdf.to_dict("records")
-        )
-        for ts_us in arrivals:
+        for ts_us in sorted(ts for ts, _ in records):
             if ts_us < wm:
                 continue
             if last is not None and ts_us > last:
@@ -661,40 +503,22 @@ def streaming_heartbeat_alerts(
                 # gap set (unless the trailing-timeout path already
                 # alerted this silence in an earlier batch)
                 if ts_us - last > gap_us and not alerted:
-                    rows.append(last)
+                    silences.append(last)
             if last is None or ts_us > last:
                 last, alerted = ts_us, False
         # ongoing silence: the timeout path (or any batch whose
         # watermark advanced far enough) proves no successor can
         # close the gap in time
         if last is not None and not alerted and wm > last + gap_us:
-            rows.append(last)
+            silences.append(last)
             alerted = True
-        state.update((json.dumps({"u": "us", "last": last,
-                                  "alerted": alerted}),))
-        if last is not None and not alerted:
-            _arm_timeout(state, (last + gap_us) // 1000 + 1, wm // 1000)
-        yield pd.DataFrame(
-            [
-                {
-                    "key": key[0],
-                    "last_seen": pd.Timestamp(t, unit="us"),
-                    "alert": True,
-                }
-                for t in rows
-            ],
-            columns=list(out_schema.fieldNames()),
-        )
+        rows = [
+            {"key": key, "last_seen": pd.Timestamp(t, unit="us"), "alert": True}
+            for t in silences
+        ]
+        wake = last + gap_us if last is not None and not alerted else None
+        return rows, {"u": "us", "last": last, "alerted": alerted}, wake
 
-    return (
-        events.withWatermark(ts_col, grace)
-        .withColumn("_key", F.col(key_col).cast("string"))
-        .groupBy("_key")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_event_time_state(
+        events, step, out_schema, key_col=key_col, ts_col=ts_col, grace=grace
     )

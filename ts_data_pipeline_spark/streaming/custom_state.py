@@ -1,19 +1,38 @@
-"""Arbitrary user reducers over keyed tumbling windows (§2.8 parity).
+"""Keyed event-time state for stateful Python operators, and the
+arbitrary user reducer over keyed tumbling windows (§2.8 parity).
+
+:func:`_keyed_event_time_state` is the engine's one
+``applyInPandasWithState`` driver. It owns the watermark, the string
+``_key`` grouping, the JSON state column (load, update, remove), the
+µs event-time decode, the timeout arming and the output frame. An
+operator supplies only its decision step::
+
+    step(key, state, records, wm_us) -> (rows, new_state, wake_us)
+
+``state`` is the decoded JSON (None for a new key), ``records``
+yields ``(ts_us, record-dict)`` for this call's rows (none when the
+key timed out), ``wm_us`` is the current watermark in µs. The step
+returns its output rows (dicts keyed by the output schema), the state
+to store (None removes it) and ``wake_us``, the event time the
+watermark must STRICTLY pass before the key is called again without
+data (None arms nothing). Event-time timeouts fire when the ms
+watermark strictly exceeds the set timestamp, so ``floor(wake_us /
+1000)`` fires exactly at the first watermark past ``wake_us``; it is
+clamped to the watermark, the earliest instant Spark accepts.
 
 The reference's window aggregation API takes *user-supplied Python
 callables* — ``initializer`` seeds the per-(key, window) state and
 ``reducer`` folds each record into it
 (/root/reference/option_trade_aggs/main.py:85-188, wired at
 main.py:221-225). The declarative conditional-sum restatement
-(operators/window_agg.py) covers the shipped reducer; THIS module is
-the general form for reducers that are not expressible as SQL
-aggregates, built on ``applyInPandasWithState``.
-
-Semantics mirror the declarative path (T1-T3): event-time tumbling
-windows, watermark grace, append-mode emit-final. State per key is a
-dict of open windows -> opaque accumulator; windows whose end has
-passed the watermark are emitted and evicted at batch boundaries, and
-rows arriving after their window was evicted are dropped (the same
+(operators/window_agg.py) covers the shipped reducer;
+:func:`keyed_window_reduce` is the general form for reducers that are
+not expressible as SQL aggregates. Its semantics mirror the
+declarative path (T1-T3): event-time tumbling windows, watermark
+grace, append-mode emit-final. State per key is a dict of open
+windows -> opaque accumulator; windows whose end has passed the
+watermark are emitted and evicted at batch boundaries, and rows
+arriving after their window was evicted are dropped (the same
 guarantee Spark gives the built-in aggregation — see
 tests/test_streaming.py for the pinned behavior).
 
@@ -21,24 +40,80 @@ Scale: state lives in the executor state store sharded by the groupBy
 key — identical placement to the built-in agg; the Python hop prices
 in Arrow batch transfer, which is why the declarative path remains
 the default (UDFs are the slow path, reducers only when semantics
-demand them).
+demand them). The CEP operators in streaming/cep.py run on the same
+driver.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Any, Callable, Iterator, Tuple
+from typing import Any, Callable, Iterator, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 Initializer = Callable[[], dict]
 Reducer = Callable[[dict, dict], dict]
+Step = Callable[
+    [str, Any, Iterator[Tuple[int, dict]], int], Tuple[list, Any, Optional[int]]
+]
 
-#: state: JSON-encoded {window_start_ms: accumulator-dict}
 _STATE_SCHEMA = T.StructType([T.StructField("js", T.StringType())])
+
+
+def _keyed_event_time_state(
+    df: DataFrame,
+    step: Step,
+    out_schema: T.StructType,
+    *,
+    key_col: str,
+    ts_col: str,
+    grace: str,
+) -> DataFrame:
+    """Run ``step`` per ``key_col`` value under an event-time
+    watermark with ``grace`` (see the module docstring for the step
+    contract); append-mode output with ``out_schema``."""
+    columns = out_schema.fieldNames()
+
+    def records(pdfs: Iterator[pd.DataFrame]) -> Iterator[Tuple[int, dict]]:
+        for pdf in pdfs:
+            for rec in pdf.to_dict("records"):
+                del rec["_key"]  # the grouping column, not the caller's
+                yield int(rec[ts_col].value // 1_000), rec
+
+    def fold(
+        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        wm_ms = state.getCurrentWatermarkMs()
+        rows, new_state, wake_us = step(
+            key[0],
+            json.loads(state.get[0]) if state.exists else None,
+            records(pdfs),
+            wm_ms * 1000,
+        )
+        if new_state is not None:
+            state.update((json.dumps(new_state),))
+            if wake_us is not None:
+                state.setTimeoutTimestamp(max(wake_us // 1000, wm_ms))
+        elif state.exists:
+            state.remove()
+        yield pd.DataFrame(rows, columns=columns)
+
+    return (
+        df.withWatermark(ts_col, grace)
+        .withColumn("_key", F.col(key_col).cast("string"))
+        .groupBy("_key")
+        .applyInPandasWithState(
+            fold,
+            outputStructType=out_schema,
+            stateStructType=_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
+    )
 
 
 def keyed_window_reduce(
@@ -57,7 +132,7 @@ def keyed_window_reduce(
     ``value_fields`` declares the accumulator's output columns
     (name, spark-type). The reducer sees each record as a plain dict
     (the reference's record shape) and returns the updated
-    accumulator dict.
+    accumulator dict. State: JSON {window_start_ms: accumulator}.
     """
     out_schema = T.StructType(
         [
@@ -72,60 +147,40 @@ def keyed_window_reduce(
     )
     field_names = [n for n, _ in value_fields]
 
-    def fold(
-        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        windows: dict[int, dict] = (
-            {int(k): v for k, v in json.loads(state.get[0]).items()}
-            if state.exists
-            else {}
-        )
-        wm = state.getCurrentWatermarkMs()
-        for pdf in pdfs:
-            for rec in pdf.to_dict("records"):
-                ts_ms = int(rec[ts_col].value // 1_000_000)
-                w_start = ts_ms - ts_ms % window_ms
-                if w_start + window_ms <= wm and w_start not in windows:
-                    continue  # late beyond eviction: dropped (T2)
-                acc = windows.setdefault(w_start, initializer())
-                windows[w_start] = reducer(acc, rec)
-        finals = sorted(w for w in windows if w + window_ms <= wm)
+    def step(key, st, records, wm_us):
+        wm = wm_us // 1000
+        windows = {int(k): v for k, v in (st or {}).items()}
+        for ts_us, rec in records:
+            ts_ms = ts_us // 1000
+            w_start = ts_ms - ts_ms % window_ms
+            if w_start + window_ms <= wm and w_start not in windows:
+                continue  # late beyond eviction: dropped (T2)
+            acc = windows.setdefault(w_start, initializer())
+            windows[w_start] = reducer(acc, rec)
         rows = []
-        for w in finals:
+        for w in sorted(w for w in windows if w + window_ms <= wm):
             acc = windows.pop(w)
             rows.append(
                 {
                     "window_start": pd.Timestamp(w, unit="ms"),
                     "window_end": pd.Timestamp(w + window_ms, unit="ms"),
-                    key_col: key[0],
+                    key_col: key,
                     **{n: acc.get(n) for n in field_names},
                 }
             )
-        if windows:
-            state.update((json.dumps({str(k): v for k, v in windows.items()}),))
-            # Wake this key when the watermark passes the oldest open
-            # window so finals flush without new per-key data (T3).
-            # Event-time timeouts fire only when the watermark STRICTLY
-            # exceeds the set timestamp, but the emission predicate
-            # (and the built-in agg, pinned by
-            # test_append_emits_at_exact_watermark_boundary) closes a
-            # window at watermark == window_end — so arm the timeout
-            # 1 ms early or a boundary-equality window never flushes.
-            state.setTimeoutTimestamp(min(windows) + window_ms - 1)
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(rows, columns=list(out_schema.fieldNames()))
+        if not windows:
+            return rows, None, None
+        # Wake this key when the watermark reaches the oldest open
+        # window's end so finals flush without new per-key data (T3).
+        # The emission predicate (and the built-in agg, pinned by
+        # test_append_emits_at_exact_watermark_boundary) closes a
+        # window at watermark == window_end, so the watermark must
+        # strictly pass the instant 1 µs before it.
+        wake_us = (min(windows) + window_ms) * 1000 - 1
+        return rows, {str(k): v for k, v in windows.items()}, wake_us
 
-    return (
-        trades.withWatermark(ts_col, grace)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fold,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_event_time_state(
+        trades, step, out_schema, key_col=key_col, ts_col=ts_col, grace=grace
     )
 
 

@@ -33,11 +33,6 @@ from pyspark.sql import types as T
 HEADER_TYPE = "array<struct<key:string,value:binary>>"
 
 
-def sha256_record_key(*cols: Column) -> Column:
-    """Deterministic record key: sha256 over concatenated fields (P11)."""
-    return F.sha2(F.concat_ws("", *cols), 256)
-
-
 def to_kafka_json(
     df: DataFrame,
     key_col: str,
