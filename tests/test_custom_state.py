@@ -165,7 +165,7 @@ def test_progress_monitor_collects_batch_metrics(spark, tmp_path):
         _write_chunk(spark, [_trade("A", "2024-01-01 10:05:00")], data_dir)
         stream = windowed.parquet_stream(spark, data_dir, TRADE_SCHEMA, max_files=1)
         agg = windowed.streaming_option_window_agg(stream)
-        windowed.run_available_now(agg, "t_monitor", str(tmp_path / "ckpt"))
+        q = windowed.run_available_now(agg, "t_monitor", str(tmp_path / "ckpt"))
         # Listener delivery is async; progress arrives shortly after.
         import time
 
@@ -177,11 +177,19 @@ def test_progress_monitor_collects_batch_metrics(spark, tmp_path):
         assert s["total_rows"] >= 2
         assert s["n_batches"] >= 2
         assert s["avg_batch_ms"] is None or s["avg_batch_ms"] > 0
+        # The listener is session-wide: the query id picks this
+        # stream's rows, which are every batch it ran.
+        mine = [m for m in mon.state.metrics if m.query_id == q.id]
+        assert sum(m.num_input_rows for m in mine) >= 2
+        assert [m.batch_id for m in mine] == list(range(len(mine)))
         # The state operator's width is the session's shuffle
-        # partitions, and every batch commits its state store.
+        # partitions, and every batch commits its state store, its
+        # offsets log and its source offsets.
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        assert all(m.state_partitions == width for m in mon.state.metrics)
-        assert all(m.state_commit_ms >= 0 for m in mon.state.metrics)
+        assert all(m.state_partitions == width for m in mine)
+        assert all(m.state_commit_ms >= 0 for m in mine)
+        assert all(m.wal_ms >= 0 for m in mine)
+        assert all(m.offsets_ms >= 0 for m in mine)
     finally:
         spark.streams.removeListener(mon)
 

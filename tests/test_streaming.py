@@ -1725,3 +1725,108 @@ def test_replay_gate_sizes_state_to_slots_under_caller_width(spark, tmp_path):
     finally:
         spark.streams.removeListener(mon)
         spark.conf.set(key, prev)
+
+
+def test_replay_gate_applies_checkpoint_manager_and_unsets_it_after(
+    spark, monkeypatch
+):
+    """get_spark sessions commit checkpoints through the FileSystem
+    manager. A replay gate on a session without the engine's rules
+    (the key unset, the caller's own width) applies both for its run,
+    returns the same rows as under the rules, then unsets the key again
+    and hands the caller's width back."""
+    from ts_data_pipeline_spark.queries import streaming as qs
+    from ts_data_pipeline_spark.session import (
+        CHECKPOINT_FILE_MANAGER, get_spark, session_rules,
+    )
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    width_key = "spark.sql.shuffle.partitions"
+    assert get_spark() is spark
+    assert spark.conf.get(key) == CHECKPOINT_FILE_MANAGER
+    jvm = spark._jvm
+    cfm = getattr(
+        jvm, "org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager"
+    )
+    manager = cfm.create(
+        jvm.org.apache.hadoop.fs.Path("file:///tmp"),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == CHECKPOINT_FILE_MANAGER
+
+    seen = []
+    run = windowed.run_available_now
+
+    def spy(df, name, ckpt):
+        seen.append((spark.conf.get(key, None), spark.conf.get(width_key)))
+        return run(df, name, ckpt)
+
+    monkeypatch.setattr(qs.windowed, "run_available_now", spy)
+    df = spark.createDataFrame(
+        [
+            _trade("A", "2024-01-01 10:00:10"),
+            _trade("B", "2024-01-01 10:00:40", premium=3.0, side="sell"),
+            _trade("A", "2024-01-01 10:05:00"),
+        ],
+        TRADE_SCHEMA,
+    )
+
+    def gate():
+        finals = qs._run_replay_gate(
+            spark, df, "t_gate_ckpt_", windowed.streaming_option_window_agg, n_chunks=2
+        )
+        return sorted(tuple(r) for r in finals.collect())
+
+    caller_width = str(spark.sparkContext.defaultParallelism + 3)
+    try:
+        with_rules = gate()
+        spark.conf.unset(key)
+        spark.conf.set(width_key, caller_width)
+        without = gate()
+        assert spark.conf.get(key, None) is None
+        assert spark.conf.get(width_key) == caller_width
+    finally:
+        for k, v in session_rules(spark).items():
+            spark.conf.set(k, v)
+    assert without == with_rules and len(with_rules) == 2
+    rules = session_rules(spark)
+    assert seen == [(CHECKPOINT_FILE_MANAGER, rules[width_key])] * 2
+
+
+def test_checkpoint_commits_keep_their_checksums(spark, tmp_path):
+    """The FileSystem checkpoint manager drops no integrity check: every
+    state delta keeps Spark's checkpoint checksum (``N.delta.crc``) and
+    Hadoop's sidecar (``.N.delta.crc``), and every offsets and commits
+    log entry keeps its ``.N.crc``, with the checksum conf at its
+    default."""
+    assert spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true"
+    data_dir = str(tmp_path / "data")
+    ckpt = tmp_path / "ckpt"
+    _write_chunk(spark, [_trade("A", "2024-01-01 10:00:10")], data_dir)
+    _write_chunk(spark, [_trade("A", "2024-01-01 10:05:00")], data_dir)
+    stream = windowed.parquet_stream(spark, data_dir, TRADE_SCHEMA, max_files=1)
+    q = (
+        windowed.streaming_option_window_agg(stream)
+        .writeStream.format("parquet")
+        .outputMode("append")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    partitions = [d for d in (ckpt / "state" / "0").iterdir() if d.name.isdigit()]
+    assert len(partitions) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for part in partitions:
+        names = {f.name for f in part.iterdir()}
+        deltas = sorted(n for n in names if n.endswith(".delta"))
+        assert deltas, part
+        for n in deltas:
+            assert {f"{n}.crc", f".{n}.crc"} <= names, (part, n)
+    for log in ("offsets", "commits"):
+        names = {f.name for f in (ckpt / log).iterdir()}
+        entries = sorted(n for n in names if n.isdigit())
+        assert len(entries) >= 2, log
+        for n in entries:
+            assert f".{n}.crc" in names, (log, n)

@@ -21,6 +21,7 @@ cutoff predicate. Reference semantics being pinned: the reference's
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
@@ -33,7 +34,7 @@ from pyspark.sql import types as T
 from ts_data_pipeline_spark import io
 from ts_data_pipeline_spark.operators import trades
 from ts_data_pipeline_spark.registry import register
-from ts_data_pipeline_spark.session import shuffle_partitions
+from ts_data_pipeline_spark.session import session_rules
 from ts_data_pipeline_spark.streaming import kafka_io, windowed
 
 TRADE_VALUE_SCHEMA = T.StructType(
@@ -193,19 +194,34 @@ def _run_replay_gate(
     stream = windowed.parquet_stream(spark, data_dir, df.schema, max_files=1)
     out = build(stream)
     name = f"{prefix}{uuid.uuid4().hex[:8]}"
-    # The state store takes its width from the session at the first
-    # micro-batch. A caller's own session may carry Spark's default of
-    # 200, so size it to the executor slots for this run and restore
-    # the caller's value after, leaving their later plans unchanged.
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, shuffle_partitions(spark))
-    try:
+    with _session_rules(spark):
         windowed.run_available_now(out, name, os.path.join(base, "ckpt"))
-    finally:
-        spark.conf.set(key, prev)
     shutil.rmtree(base, ignore_errors=True)
     return spark.table(name)
+
+
+@contextlib.contextmanager
+def _session_rules(spark: SparkSession):
+    """Apply the engine's session rules for one gate run and restore
+    the caller's values after (a key the caller never set is unset
+    again), leaving their later plans unchanged. The engine's public
+    entry runs on the caller's own session, where ``get_spark`` never
+    ran: the state store takes its width from the session at the first
+    micro-batch (Spark's default of 200 would size every gate's store),
+    and the gate's checkpoint is a local ``mkdtemp`` dir, where the
+    ``FileSystem`` checkpoint manager holds (``session.py``)."""
+    rules = session_rules(spark)
+    prev = {key: spark.conf.get(key, None) for key in rules}
+    for key, value in rules.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def streaming_window_finals(spark: SparkSession, sf_dir: str) -> DataFrame:

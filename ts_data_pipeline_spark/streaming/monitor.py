@@ -31,6 +31,14 @@ class BatchMetric:
     # in partition sizing shows here without re-profiling.
     state_partitions: Optional[int]
     state_commit_ms: Optional[int]
+    # Checkpoint writes outside the state store: the offsets log
+    # (walCommit), and the source's offset fetch, which logs a file
+    # source's new files, plus the commit log (latestOffset +
+    # commitOffsets).
+    wal_ms: Optional[int]
+    offsets_ms: Optional[int]
+    # The listener is session-wide; the query id keeps one stream's rows.
+    query_id: str
 
 
 @dataclass
@@ -56,14 +64,19 @@ class ProgressMonitor(StreamingQueryListener):
     def onQueryProgress(self, event):
         p = event.progress
         op = p.stateOperators[0] if p.stateOperators else None
+        dur = p.durationMs or {}
+        offsets = [dur[k] for k in ("latestOffset", "commitOffsets") if k in dur]
         m = BatchMetric(
             batch_id=p.batchId,
             num_input_rows=p.numInputRows,
-            process_ms=(p.durationMs or {}).get("triggerExecution"),
+            process_ms=dur.get("triggerExecution"),
             watermark=(p.eventTime or {}).get("watermark"),
             state_rows=op.numRowsTotal if op else None,
             state_partitions=op.numShufflePartitions if op else None,
             state_commit_ms=op.commitTimeMs if op else None,
+            wal_ms=dur.get("walCommit"),
+            offsets_ms=sum(offsets) if offsets else None,
+            query_id=str(p.id),
         )
         self.state.metrics.append(m)
         if m.num_input_rows == 0:
