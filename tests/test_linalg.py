@@ -123,12 +123,13 @@ def test_pca_project_array_matches_scalar_form(spark):
         assert vals == arr[vid], vid
 
 
-def test_pca_prefix_recall_beats_raw_prefix_on_clustered(spark):
+def test_pca_prefix_recall_beats_raw_prefix_on_clustered(spark, tmp_path):
     """The rotated Matryoshka prefix (VERDICT r8 #5): on a clustered
     corpus the top-16 principal basis captures the between-cluster
     structure the raw first-16 slice spreads across all coordinates,
     so the rotated coarse scorer's recall dominates the raw one at
     the same shortlist budget."""
+    from tests.conftest import identity_basis
     from ts_data_pipeline_spark.operators import similarity
     from ts_data_pipeline_spark.operators.synth import clustered_embeddings
 
@@ -139,18 +140,20 @@ def test_pca_prefix_recall_beats_raw_prefix_on_clustered(spark):
         (r.query_id, r.cand_id)
         for r in similarity.brute_force_topk(emb, qids, k=k).collect()
     }
-    raw = {
-        (r.query_id, r.cand_id)
-        for r in similarity.prefix_dim_topk(
-            emb, qids, 16, k=k, rerank_factor=8
-        ).collect()
-    }
-    pca = {
-        (r.query_id, r.cand_id)
-        for r in similarity.pca_prefix_topk(
-            emb, qids, 16, k=k, rerank_factor=8, dim=64
-        ).collect()
-    }
+    comps, _vals, mu = linalg.pca_components(emb, "embedding", 64, k=16)
+
+    def prefix_pairs(name, basis):
+        path = str(tmp_path / name)
+        similarity.prefix_index_write(emb, path, 16, basis=basis)
+        return {
+            (r.query_id, r.cand_id)
+            for r in similarity.prefix_query_index(
+                spark, path, emb, qids, k=k, rerank_factor=8
+            ).collect()
+        }
+
+    raw = prefix_pairs("raw", identity_basis(16, 64))
+    pca = prefix_pairs("pca", (comps, mu))
     r_raw = len(truth & raw) / len(truth)
     r_pca = len(truth & pca) / len(truth)
     assert r_pca >= r_raw
@@ -164,9 +167,9 @@ def test_pca_prefix_recall_beats_raw_prefix_on_clustered(spark):
 def test_pca_basis_sidecar_roundtrip_bit_identical(spark, tmp_path):
     """VERDICT r9 ask #4: the persisted PCA basis (JSON sidecar,
     train-once/query-many) reloads to the IDENTICAL doubles (JSON
-    shortest-repr round-trip is exact), so pca_prefix_topk over
-    basis_path returns the same rows AND the same projected
-    coordinates as the in-memory basis."""
+    shortest-repr round-trip is exact), so a prefix index written
+    from basis_path answers with the same rows AND the same projected
+    coordinates as one written from the in-memory basis."""
     from ts_data_pipeline_spark import io
     from ts_data_pipeline_spark.operators import linalg, similarity
     from tests.conftest import SF_DIR
@@ -179,12 +182,16 @@ def test_pca_basis_sidecar_roundtrip_bit_identical(spark, tmp_path):
     assert comps2 == comps and vals2 == vals and mu2 == mu  # bit-exact
 
     qids = [3, 4, 5]
-    mem = similarity.pca_prefix_topk(
-        emb, qids, 8, k=5, rerank_factor=4, basis=(comps, mu)
-    ).collect()
-    disk = similarity.pca_prefix_topk(
-        emb, qids, 8, k=5, rerank_factor=4, basis_path=path
-    ).collect()
+
+    def query(name, **basis):
+        idx = str(tmp_path / name)
+        similarity.prefix_index_write(emb, idx, 8, **basis)
+        return similarity.prefix_query_index(
+            spark, idx, emb, qids, k=5, rerank_factor=4
+        ).collect()
+
+    mem = query("mem", basis=(comps, mu))
+    disk = query("disk", basis_path=path)
     assert sorted(map(tuple, mem)) == sorted(map(tuple, disk))
 
     # projected coordinates themselves are bit-identical
@@ -195,8 +202,8 @@ def test_pca_basis_sidecar_roundtrip_bit_identical(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="basis"):
-        similarity.pca_prefix_topk(
-            emb, qids, 8, basis=(comps, mu), basis_path=path
+        similarity.prefix_index_write(
+            emb, str(tmp_path / "both"), 8, basis=(comps, mu), basis_path=path
         )
 
 

@@ -2,9 +2,76 @@
 
 from __future__ import annotations
 
-from tests.conftest import SF_DIR
+import pytest
+
+from tests.conftest import SF_DIR, assert_twin_rows, identity_basis
 from ts_data_pipeline_spark import io
 from ts_data_pipeline_spark.operators import dedup
+
+
+# sf0.001 indexes shared by the tests that only query them, built once
+# per module; tests of build, append or compaction make their own.
+def _built(tmp_path_factory, name, build):
+    path = str(tmp_path_factory.mktemp(name) / "idx")
+    build(path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def pq_sampled_index(spark, tmp_path_factory):
+    """Flat PQ index over the sampled (training-free) codebooks."""
+    from ts_data_pipeline_spark.operators import similarity
+    from ts_data_pipeline_spark.queries.llmdata import PQ_CODEBOOK_IDS
+
+    emb = io.load(spark, SF_DIR, "embeddings")
+    return _built(
+        tmp_path_factory, "pq_sampled",
+        lambda p: similarity.pq_build_index(emb, p, PQ_CODEBOOK_IDS),
+    )
+
+
+@pytest.fixture(scope="module")
+def ivfpq_index(spark, tmp_path_factory):
+    """Untrained IVFPQ index with the IVF_CENTROID_IDS coarse cells."""
+    from ts_data_pipeline_spark.operators import similarity
+    from ts_data_pipeline_spark.queries.llmdata import PQ_CODEBOOK_IDS
+    from ts_data_pipeline_spark.queries.timeseries import IVF_CENTROID_IDS
+
+    emb = io.load(spark, SF_DIR, "embeddings")
+    return _built(
+        tmp_path_factory, "ivfpq",
+        lambda p: similarity.ivfpq_build_index(
+            emb, p, PQ_CODEBOOK_IDS, IVF_CENTROID_IDS
+        ),
+    )
+
+
+@pytest.fixture(scope="module")
+def bsign64_index(spark, tmp_path_factory):
+    """64-bit (axis-sign only) signature index."""
+    from ts_data_pipeline_spark.operators import similarity
+    from ts_data_pipeline_spark.queries.llmdata import EMBEDDING_DIM
+
+    emb = io.load(spark, SF_DIR, "embeddings")
+    return _built(
+        tmp_path_factory, "bsign64",
+        lambda p: similarity.bsign_index_write(emb, p, EMBEDDING_DIM),
+    )
+
+
+@pytest.fixture(scope="module")
+def prefix16_index(spark, tmp_path_factory):
+    """Raw 16-dim prefix: the identity basis, as the gate's mrl leg."""
+    from ts_data_pipeline_spark.operators import similarity
+    from ts_data_pipeline_spark.queries.llmdata import EMBEDDING_DIM
+
+    emb = io.load(spark, SF_DIR, "embeddings")
+    return _built(
+        tmp_path_factory, "prefix16",
+        lambda p: similarity.prefix_index_write(
+            emb, p, 16, basis=identity_basis(16, EMBEDDING_DIM)
+        ),
+    )
 
 
 def test_minhash_lsh_recall_vs_exact(spark):
@@ -958,26 +1025,6 @@ def test_snapshot_diff_verdicts(spark):
                    5: "unchanged", 6: "changed"}
 
 
-def test_pandas_udf_ann_matches_expression_path(spark):
-    """The Arrow-batched numpy escape hatch must reproduce the
-    expression-path brute-force top-k value-for-value."""
-    from ts_data_pipeline_spark.operators import similarity
-    from ts_data_pipeline_spark.queries.llmdata import ANN_QUERY_IDS
-
-    emb = io.load(spark, SF_DIR, "embeddings")
-    expr_rows = {
-        (r.query_id, r.rank): (r.cand_id, r.cos_sim)
-        for r in similarity.brute_force_topk(emb, ANN_QUERY_IDS, k=10).collect()
-    }
-    udf_rows = {
-        (r.query_id, r.rank): (r.cand_id, r.cos_sim)
-        for r in similarity.brute_force_topk_pandas(
-            emb, ANN_QUERY_IDS, k=10
-        ).collect()
-    }
-    assert expr_rows == udf_rows
-
-
 def test_source_drift_kl_closed_form_equals_dense(spark):
     """The absent-mass closed form must equal the dense smoothed KL —
     exercised with sources that MISS most of the vocabulary (the
@@ -1024,28 +1071,24 @@ def test_source_drift_kl_closed_form_equals_dense(spark):
     assert all(r["kl"] > 0 for r in got.values())
 
 
-def test_pq_topk_guarantees(spark):
-    """Product quantization (operators/similarity.py::pq_topk):
-    (a) re-ranked results carry EXACT cosines (every reported pair's
-    cos_sim equals the brute-force value), (b) recall@5 vs brute
-    force clears a floor at sf0.001, (c) the codes relation is
-    m rows per vector with codes drawn from the codebook ids, and
-    (d) queries never return themselves."""
-    from ts_data_pipeline_spark import io as _io
+def test_pq_topk_guarantees(spark, pq_sampled_index):
+    """Product quantization (similarity.pq_query_index over the
+    sampled-codebook index): (a) re-ranked results carry EXACT
+    cosines (every reported pair's cos_sim equals the brute-force
+    value), (b) recall@5 vs brute force clears a floor at sf0.001,
+    (c) the codes relation is m rows per vector with codes drawn from
+    the codebook ids, and (d) queries never return themselves."""
     from ts_data_pipeline_spark.operators import similarity
-    from ts_data_pipeline_spark.queries.llmdata import (
-        ANN_QUERY_IDS,
-        PQ_CODEBOOK_IDS,
-    )
+    from ts_data_pipeline_spark.queries.llmdata import ANN_QUERY_IDS
 
-    emb = _io.load(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = io.load(spark, SF_DIR, "embeddings")
     k = 5
     brute = similarity.brute_force_topk(emb, ANN_QUERY_IDS, k=k).collect()
     truth = {(r.query_id, r.cand_id) for r in brute}
     exact_cos = {(r.query_id, r.cand_id): r.cos_sim for r in brute}
 
-    got = similarity.pq_topk(
-        emb, ANN_QUERY_IDS, PQ_CODEBOOK_IDS, k=k
+    got = similarity.pq_query_index(
+        spark, pq_sampled_index, emb, ANN_QUERY_IDS, k=k
     ).collect()
     pairs = {(r.query_id, r.cand_id) for r in got}
     assert all(r.query_id != r.cand_id for r in got)
@@ -1060,8 +1103,8 @@ def test_pq_topk_guarantees(spark):
     # recall is bought with shortlist size — the PQ deployment knob:
     # rerank_factor=20 must beat the default and clear a real floor
     # (measured 0.8 at sf0.001)
-    wide = similarity.pq_topk(
-        emb, ANN_QUERY_IDS, PQ_CODEBOOK_IDS, k=k, rerank_factor=20
+    wide = similarity.pq_query_index(
+        spark, pq_sampled_index, emb, ANN_QUERY_IDS, k=k, rerank_factor=20
     ).collect()
     wide_pairs = {(r.query_id, r.cand_id) for r in wide}
     wide_recall = len(truth & wide_pairs) / len(truth)
@@ -1078,27 +1121,23 @@ def test_pq_topk_guarantees(spark):
     assert sub.count() == n * 8
 
 
-def test_ivfpq_candidates_respect_probed_cells(spark):
-    """IVFPQ (similarity.ivfpq_topk): every returned candidate's
-    coarse cell is one of its query's nprobe probed cells (the IVF
-    restriction really applies), and reported cosines are exact."""
+def test_ivfpq_candidates_respect_probed_cells(spark, ivfpq_index):
+    """IVFPQ (similarity.ivfpq_query_index): every returned
+    candidate's coarse cell is one of its query's nprobe probed cells
+    (the IVF restriction really applies), and reported cosines are
+    exact."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ts_data_pipeline_spark import io as _io
     from ts_data_pipeline_spark.operators import similarity
     from ts_data_pipeline_spark.operators.similarity import dot
-    from ts_data_pipeline_spark.queries.llmdata import (
-        ANN_QUERY_IDS,
-        PQ_CODEBOOK_IDS,
-    )
+    from ts_data_pipeline_spark.queries.llmdata import ANN_QUERY_IDS
     from ts_data_pipeline_spark.queries.timeseries import IVF_CENTROID_IDS
 
-    emb = _io.load(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = io.load(spark, SF_DIR, "embeddings")
     nprobe = 2
-    got = similarity.ivfpq_topk(
-        emb, ANN_QUERY_IDS, IVF_CENTROID_IDS, PQ_CODEBOOK_IDS,
-        k=5, nprobe=nprobe,
+    got = similarity.ivfpq_query_index(
+        spark, ivfpq_index, emb, ANN_QUERY_IDS, k=5, nprobe=nprobe
     ).collect()
     assert got and all(r.query_id != r.cand_id for r in got)
 
@@ -1145,38 +1184,31 @@ def test_ivfpq_candidates_respect_probed_cells(spark):
             assert r.cos_sim == brute[(r.query_id, r.cand_id)]
 
 
-def test_pq_index_roundtrip_matches_inline(spark, tmp_path):
+def test_pq_index_roundtrip_matches_twin(spark, oracle, pq_sampled_index):
     """PQ index lifecycle: build-once codes on disk, query-many —
-    results byte-match the inline pq_topk, and the persisted codes
+    results match the DuckDB twin pq_topk_sql, and the persisted codes
     relation is a fraction of the raw vector bytes (the compression
     that funds the compressed-domain scan)."""
+    import json
     import os
 
-    from ts_data_pipeline_spark import io as _io
     from ts_data_pipeline_spark.operators import similarity
     from ts_data_pipeline_spark.queries.llmdata import (
         ANN_QUERY_IDS,
         PQ_CODEBOOK_IDS,
     )
 
-    emb = _io.load(spark, "/root/testdata/sf0.001", "embeddings")
-    path = str(tmp_path / "pqidx")
-    meta = similarity.pq_build_index(emb, path, PQ_CODEBOOK_IDS)
-    assert meta["m"] == 8
+    with open(os.path.join(pq_sampled_index, "_pq_meta.json")) as f:
+        assert json.load(f)["m"] == 8
 
-    got = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.pq_query_index(
-            spark, path, emb, ANN_QUERY_IDS, k=5
-        ).collect()
+    emb = io.load(spark, SF_DIR, "embeddings")
+    assert assert_twin_rows(
+        similarity.pq_query_index(
+            spark, pq_sampled_index, emb, ANN_QUERY_IDS, k=5
+        ),
+        oracle,
+        similarity.pq_topk_sql(ANN_QUERY_IDS, PQ_CODEBOOK_IDS, k=5),
     )
-    want = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.pq_topk(
-            emb, ANN_QUERY_IDS, PQ_CODEBOOK_IDS, k=5
-        ).collect()
-    )
-    assert got == want and len(got) > 0
 
     def dir_bytes(d):
         return sum(
@@ -1184,10 +1216,8 @@ def test_pq_index_roundtrip_matches_inline(spark, tmp_path):
             for r, _, fs in os.walk(d) for f in fs
         )
 
-    codes_b = dir_bytes(os.path.join(path, "codes"))
-    raw_b = os.path.getsize(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    )
+    codes_b = dir_bytes(os.path.join(pq_sampled_index, "codes"))
+    raw_b = os.path.getsize(io.table_path(SF_DIR, "embeddings"))
     assert codes_b < raw_b / 2, (codes_b, raw_b)
 
 
@@ -1223,10 +1253,12 @@ def test_clean_text_unicode_and_whitespace(spark):
     assert got[4].chars_removed == 4
 
 
-def test_pq_index_append_is_delta_scoped_and_queryable(spark, tmp_path):
+def test_pq_index_append_is_delta_scoped_and_queryable(
+    spark, tmp_path, pq_sampled_index
+):
     """pq_index_append: existing code files untouched (delta-scoped
     I/O), and queries over the appended index return results
-    identical to an inline pq_topk over the full corpus (pinned
+    identical to the index built over the full corpus (pinned
     codebooks keep old and new codes comparable)."""
     import os
 
@@ -1239,7 +1271,7 @@ def test_pq_index_append_is_delta_scoped_and_queryable(spark, tmp_path):
         PQ_CODEBOOK_IDS,
     )
 
-    emb = _io.load(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = _io.load(spark, SF_DIR, "embeddings")
     # the build corpus must CONTAIN the codebook rows (the builder
     # rejects a partial codebook rather than silently degrading)
     head = emb.filter(
@@ -1264,19 +1296,15 @@ def test_pq_index_append_is_delta_scoped_and_queryable(spark, tmp_path):
         assert after[f] == mt, f
     assert len(after) > len(before)
 
-    got = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.pq_query_index(
-            spark, path, emb, ANN_QUERY_IDS, k=5
-        ).collect()
-    )
-    want = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.pq_topk(
-            emb, ANN_QUERY_IDS, PQ_CODEBOOK_IDS, k=5
-        ).collect()
-    )
-    assert got == want
+    def q(p):
+        return sorted(
+            (r.query_id, r.cand_id, r.cos_sim, r.rank)
+            for r in similarity.pq_query_index(
+                spark, p, emb, ANN_QUERY_IDS, k=5
+            ).collect()
+        )
+
+    assert q(path) == q(pq_sampled_index)
 
 
 def test_recipe_optional_clean_and_eval_split(spark):
@@ -1309,13 +1337,14 @@ def test_recipe_optional_clean_and_eval_split(spark):
     }
 
 
-def test_pq_index_trained_roundtrip_matches_inline(spark, tmp_path):
+def test_pq_index_trained_roundtrip_matches_twin(spark, oracle, tmp_path):
     """Index lifecycle under TRAINED codebooks (VERDICT r6 #1's
     reference point): pq_build_index(train_iters=3) persists the
     Lloyd-trained codebook, pq_query_index consumes the STORED
     relation (codebook-agnostic — it never re-trains), and results
-    byte-match the inline trained pq_topk; a delta append under the
-    pinned trained codebook stays value-identical to inline too."""
+    match the DuckDB twin pq_topk_sql under the same training; a
+    delta append under a head-trained codebook stays value-identical
+    to encoding the full corpus under that codebook."""
     from pyspark.sql import functions as F
 
     from ts_data_pipeline_spark import io as _io
@@ -1327,7 +1356,24 @@ def test_pq_index_trained_roundtrip_matches_inline(spark, tmp_path):
         PQ_TRAIN_ITERS,
     )
 
-    emb = _io.load(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = _io.load(spark, SF_DIR, "embeddings")
+    full = str(tmp_path / "pqidx_full")
+    meta = similarity.pq_build_index(
+        emb, full, PQ_CODEBOOK_IDS, train_iters=PQ_TRAIN_ITERS
+    )
+    assert meta["train_iters"] == PQ_TRAIN_ITERS
+    assert assert_twin_rows(
+        similarity.pq_query_index(
+            spark, full, emb, ANN_QUERY_IDS, k=5,
+            rerank_factor=PQ_RERANK_FACTOR,
+        ),
+        oracle,
+        similarity.pq_topk_sql(
+            ANN_QUERY_IDS, PQ_CODEBOOK_IDS, k=5,
+            rerank_factor=PQ_RERANK_FACTOR, train_iters=PQ_TRAIN_ITERS,
+        ),
+    )
+
     path = str(tmp_path / "pqidx_tr")
     head = emb.filter(
         (F.col("vec_id") < 350) | F.col("vec_id").isin(PQ_CODEBOOK_IDS)
@@ -1349,8 +1395,8 @@ def test_pq_index_trained_roundtrip_matches_inline(spark, tmp_path):
             rerank_factor=PQ_RERANK_FACTOR,
         ).collect()
     )
-    # the inline twin must train on the same head-only corpus for
-    # the codebooks to match the pinned index
+    # the reference encodes the full corpus under the same head-only
+    # trained codebook the index pinned
     cb = similarity._pq_cb_trained(
         head, PQ_CODEBOOK_IDS, 8, 8, "vec_id", "embedding",
         PQ_TRAIN_ITERS,
@@ -1547,14 +1593,14 @@ def test_kmeans_zero_norm_cluster_drops_not_nan(spark):
     )
 
 
-def test_ivfpq_index_matches_inline_and_prunes(spark, tmp_path):
+def test_ivfpq_index_matches_twin_and_prunes(spark, oracle, tmp_path):
     """VERDICT r7 ask #1 — the IVF-partitioned persisted index:
     (a) ivfpq_query_index returns value-identical results to the
-    inline ivfpq_topk under the same trained codebooks/centroids;
-    (b) the codes scan carries a PartitionFilters entry on `cell`
-    (partition-level pruning, not a full-index read); (c) the flat
-    pq_query_index still works over the partitioned layout and
-    matches inline pq_topk."""
+    DuckDB twin ivfpq_topk_sql under the same trained
+    codebooks/centroids; (b) the codes scan carries a
+    PartitionFilters entry on `cell` (partition-level pruning, not a
+    full-index read); (c) the flat pq_query_index still works over
+    the partitioned layout and matches pq_topk_sql."""
     import contextlib
     import io as pyio
     import os
@@ -1567,7 +1613,7 @@ def test_ivfpq_index_matches_inline_and_prunes(spark, tmp_path):
         PQ_CODEBOOK_IDS,
     )
 
-    emb = _io.load(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = _io.load(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "ivfpqidx")
     meta = similarity.ivfpq_build_index(
         emb, path, PQ_CODEBOOK_IDS, IVFPQ_COARSE_IDS,
@@ -1584,18 +1630,15 @@ def test_ivfpq_index_matches_inline_and_prunes(spark, tmp_path):
     df = similarity.ivfpq_query_index(
         spark, path, emb, ANN_QUERY_IDS, k=5, nprobe=2, rerank_factor=4
     )
-    got = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank) for r in df.collect()
-    )
-    want = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.ivfpq_topk(
-            emb, ANN_QUERY_IDS, IVFPQ_COARSE_IDS, PQ_CODEBOOK_IDS,
+    assert assert_twin_rows(
+        df,
+        oracle,
+        similarity.ivfpq_topk_sql(
+            ANN_QUERY_IDS, IVFPQ_COARSE_IDS, PQ_CODEBOOK_IDS,
             k=5, nprobe=2, rerank_factor=4,
             train_iters=1, coarse_train_iters=1,
-        ).collect()
+        ),
     )
-    assert got == want and len(got) > 0
 
     buf = pyio.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -1604,27 +1647,21 @@ def test_ivfpq_index_matches_inline_and_prunes(spark, tmp_path):
     assert "PartitionFilters" in plan and "cell" in plan
 
     # flat search over the SAME partitioned index: full-scan PQ
-    got_flat = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.pq_query_index(
-            spark, path, emb, ANN_QUERY_IDS, k=5
-        ).collect()
+    assert assert_twin_rows(
+        similarity.pq_query_index(spark, path, emb, ANN_QUERY_IDS, k=5),
+        oracle,
+        similarity.pq_topk_sql(
+            ANN_QUERY_IDS, PQ_CODEBOOK_IDS, k=5, train_iters=1
+        ),
     )
-    want_flat = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.pq_topk(
-            emb, ANN_QUERY_IDS, PQ_CODEBOOK_IDS, k=5, train_iters=1
-        ).collect()
-    )
-    assert got_flat == want_flat and len(got_flat) > 0
 
 
-def test_ivfpq_index_append_lands_in_cells(spark, tmp_path):
+def test_ivfpq_index_append_lands_in_cells(spark, oracle, tmp_path):
     """Append on the IVF-partitioned index: delta rows assign to
     their coarse cell under the PINNED stored centroids, land in the
     matching cell=<id>/ partitions without rewriting existing files,
-    and the appended index answers identically to a full inline
-    search."""
+    and the appended index answers identically to the DuckDB twin's
+    full-corpus search."""
     import os
 
     from pyspark.sql import functions as F
@@ -1637,7 +1674,7 @@ def test_ivfpq_index_append_lands_in_cells(spark, tmp_path):
         PQ_CODEBOOK_IDS,
     )
 
-    emb = _io.load(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = _io.load(spark, SF_DIR, "embeddings")
     seed_ids = set(PQ_CODEBOOK_IDS) | set(IVFPQ_COARSE_IDS)
     head = emb.filter(
         (F.col("vec_id") < 350) | F.col("vec_id").isin(list(seed_ids))
@@ -1667,34 +1704,34 @@ def test_ivfpq_index_append_lands_in_cells(spark, tmp_path):
     # idempotent under re-delivery
     assert similarity.pq_index_append(spark, path, tail) == 0
 
-    got = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.ivfpq_query_index(
+    assert assert_twin_rows(
+        similarity.ivfpq_query_index(
             spark, path, emb, ANN_QUERY_IDS, k=5, nprobe=2, rerank_factor=4
-        ).collect()
-    )
-    want = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.ivfpq_topk(
-            emb, ANN_QUERY_IDS, IVFPQ_COARSE_IDS, PQ_CODEBOOK_IDS,
+        ),
+        oracle,
+        similarity.ivfpq_topk_sql(
+            ANN_QUERY_IDS, IVFPQ_COARSE_IDS, PQ_CODEBOOK_IDS,
             k=5, nprobe=2, rerank_factor=4,
-        ).collect()
+        ),
     )
-    assert got == want and len(got) > 0
 
 
-def test_prefix_dim_topk_recall_and_exact_rerank(spark):
-    """Matryoshka-style prefix ANN (similarity.prefix_dim_topk): the
-    reported cos_sim/rank come from the FULL-dimension exact rerank
-    (each returned pair's cos_sim matches brute force exactly), a
-    full-width 'prefix' with ample shortlist reproduces brute force
-    outright, and a narrow prefix still recalls most of the exact
-    top-k on this corpus."""
-    from ts_data_pipeline_spark import io as _io
+def test_prefix_dim_topk_recall_and_exact_rerank(
+    spark, tmp_path, prefix16_index
+):
+    """Matryoshka-style prefix ANN (similarity.prefix_query_index over
+    identity-basis prefix indexes): the reported cos_sim/rank come
+    from the FULL-dimension exact rerank (each returned pair's cos_sim
+    matches brute force exactly), a full-width 'prefix' with ample
+    shortlist reproduces brute force outright, and a narrow prefix
+    still recalls most of the exact top-k on this corpus."""
     from ts_data_pipeline_spark.operators import similarity
-    from ts_data_pipeline_spark.queries.llmdata import ANN_QUERY_IDS
+    from ts_data_pipeline_spark.queries.llmdata import (
+        ANN_QUERY_IDS,
+        EMBEDDING_DIM,
+    )
 
-    emb = _io.load(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = io.load(spark, SF_DIR, "embeddings")
     truth = {
         (r.query_id, r.cand_id): (r.cos_sim, r.rank)
         for r in similarity.brute_force_topk(
@@ -1702,18 +1739,23 @@ def test_prefix_dim_topk_recall_and_exact_rerank(spark):
         ).collect()
     }
     # d_prefix = full width, big shortlist -> identical to brute force
+    wide = str(tmp_path / "prefix64")
+    similarity.prefix_index_write(
+        emb, wide, EMBEDDING_DIM,
+        basis=identity_basis(EMBEDDING_DIM, EMBEDDING_DIM),
+    )
     full = {
         (r.query_id, r.cand_id): (r.cos_sim, r.rank)
-        for r in similarity.prefix_dim_topk(
-            emb, ANN_QUERY_IDS, 64, k=5, rerank_factor=64
+        for r in similarity.prefix_query_index(
+            spark, wide, emb, ANN_QUERY_IDS, k=5, rerank_factor=64
         ).collect()
     }
     assert full == truth
     # narrow prefix: every returned cos_sim is the exact full-dim one
     got = {
         (r.query_id, r.cand_id): r.cos_sim
-        for r in similarity.prefix_dim_topk(
-            emb, ANN_QUERY_IDS, 16, k=5, rerank_factor=8
+        for r in similarity.prefix_query_index(
+            spark, prefix16_index, emb, ANN_QUERY_IDS, k=5, rerank_factor=8
         ).collect()
     }
     exact = {
@@ -2027,8 +2069,9 @@ def test_ivfpq_residual_auto_selects_by_measured_anisotropy(spark, tmp_path):
         )
 
 
-def test_binary_sign_recall_and_signature_shape(spark):
-    """1-bit sign quantization + exact re-rank: (a) recall@5 vs
+def test_binary_sign_recall_and_signature_shape(spark, bsign64_index):
+    """1-bit sign quantization + exact re-rank (similarity.
+    bsign_query_index over the 64-bit index): (a) recall@5 vs
     brute force at the gate's operating point (rf=32; measured 0.99
     at sf0.01, floor 0.8 leaves SF margin), (b) the packed
     signature is ceil(dim/32) words each within 32-bit range (the
@@ -2036,8 +2079,6 @@ def test_binary_sign_recall_and_signature_shape(spark):
     hamming of a vector against its own negation is exactly dim."""
     from pyspark.sql import functions as F
 
-    from tests.conftest import SF_DIR
-    from ts_data_pipeline_spark import io
     from ts_data_pipeline_spark.operators import similarity
     from ts_data_pipeline_spark.queries.llmdata import (
         ANN_QUERY_IDS,
@@ -2052,8 +2093,8 @@ def test_binary_sign_recall_and_signature_shape(spark):
     }
     approx = {
         (r.query_id, r.cand_id)
-        for r in similarity.binary_sign_topk(
-            emb, ANN_QUERY_IDS, EMBEDDING_DIM, k=5,
+        for r in similarity.bsign_query_index(
+            spark, bsign64_index, emb, ANN_QUERY_IDS, k=5,
             rerank_factor=BSIGN_RERANK_FACTOR,
         ).collect()
     }
@@ -2401,38 +2442,28 @@ def test_bsign_bits_rule_anchors_and_cap():
     assert rule(10**12, 64) == similarity.BSIGN_MAX_BITS
 
 
-def test_bsign_extended_bits_cross_engine(spark):
+def test_bsign_extended_bits_cross_engine(spark, oracle, tmp_path):
     """Hyperplane-extended signatures agree between engines at a
-    PARTIAL extra word (3 extra bits): the Spark hamming shortlist +
+    PARTIAL extra word (3 extra bits): the index's hamming shortlist +
     exact rerank equals the DuckDB twin exactly — pinning the
     pair-difference normal construction, the extra-word packing, and
     the concatenated-word hamming off the gate's axis-only path."""
-    import duckdb
-
-    from ts_data_pipeline_spark import io as _io
     from ts_data_pipeline_spark.operators import similarity
 
-    emb = _io.load(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = io.load(spark, SF_DIR, "embeddings")
     pairs = similarity.bsign_plane_pairs(3, start_id=20)
-    got = sorted(
-        (r.query_id, r.cand_id, float(r.cos_sim), r.rank)
-        for r in similarity.binary_sign_topk(
-            emb, [0, 1, 2], 64, k=5, rerank_factor=8, plane_pairs=pairs
-        ).collect()
+    path = str(tmp_path / "bsign_ext")
+    similarity.bsign_index_write(emb, path, 64, plane_pairs=pairs)
+    got = assert_twin_rows(
+        similarity.bsign_query_index(
+            spark, path, emb, [0, 1, 2], k=5, rerank_factor=8
+        ),
+        oracle,
+        similarity.binary_sign_topk_sql(
+            [0, 1, 2], 64, k=5, rerank_factor=8, plane_pairs=pairs
+        ),
     )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/embeddings.parquet')"
-    )
-    sql = similarity.binary_sign_topk_sql(
-        [0, 1, 2], 64, k=5, rerank_factor=8, plane_pairs=pairs
-    )
-    want = sorted(
-        (int(q), int(c), float(s), int(rk))
-        for q, c, s, rk in con.execute(sql).fetchall()
-    )
-    assert got == want and len(got) == 15
+    assert len(got) == 15
 
 
 def test_bsign_rule_recall_closes_the_cliff_at_sf01(spark):
@@ -2491,38 +2522,24 @@ def test_bsign_rule_recall_closes_the_cliff_at_sf01(spark):
     assert rec_rule > rec_fixed, (rec_rule, rec_fixed)
 
 
-def test_prefix_query_index_identity_basis_equals_raw_slice(spark, tmp_path):
-    """The gate's mrl leg now reads the PERSISTED prefix relation
-    under the identity basis — value-identical (bit-exact) to the
-    inline raw-slice prefix_dim_topk, so prefix_dim_topk_sql remains
-    its twin (the promotion contract of VERDICT r10 ask #2)."""
-    from ts_data_pipeline_spark import io as _io
+def test_prefix_query_index_identity_basis_equals_raw_slice(
+    spark, oracle, prefix16_index
+):
+    """The gate's mrl leg reads the PERSISTED prefix relation under
+    the identity basis — value-identical to the raw-slice DuckDB twin
+    prefix_dim_topk_sql (the promotion contract of VERDICT r10 ask
+    #2)."""
     from ts_data_pipeline_spark.operators import similarity
 
-    emb = _io.load(spark, "/root/testdata/sf0.001", "embeddings")
-    d_prefix, dim = 16, 64
-    path = str(tmp_path / "pfx")
-    similarity.prefix_index_write(
-        emb, path, d_prefix,
-        basis=(
-            [[1.0 if j == i else 0.0 for j in range(dim)]
-             for i in range(d_prefix)],
-            [0.0] * dim,
+    emb = io.load(spark, SF_DIR, "embeddings")
+    got = assert_twin_rows(
+        similarity.prefix_query_index(
+            spark, prefix16_index, emb, [0, 1, 2], k=5, rerank_factor=4
         ),
+        oracle,
+        similarity.prefix_dim_topk_sql([0, 1, 2], 16, k=5, rerank_factor=4),
     )
-    via_index = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.prefix_query_index(
-            spark, path, emb, [0, 1, 2], k=5, rerank_factor=4
-        ).collect()
-    )
-    inline = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.prefix_dim_topk(
-            emb, [0, 1, 2], d_prefix, k=5, rerank_factor=4
-        ).collect()
-    )
-    assert via_index == inline and len(inline) == 15
+    assert len(got) == 15
 
 
 def test_bsign_index_append_pinned_frame_and_idempotent(spark, tmp_path):
@@ -2594,43 +2611,32 @@ def test_fsio_torn_tmp_and_vanished_dir_hardening(spark, tmp_path):
     ) is False
 
 
-def test_prefix_index_write_sidecar_lands_on_uri_filesystem(spark, tmp_path):
+def test_prefix_index_write_sidecar_lands_on_uri_filesystem(
+    spark, oracle, tmp_path
+):
     """r11 review: the PCA-basis sidecar must land ON the index's
     filesystem — the old local-open form silently wrote a URI path
     as a literal local directory name. Build a prefix index at an
     explicit file:// URI and read everything back through the FS
     API."""
-    from pyspark.sql import functions as F
-
-    from ts_data_pipeline_spark import io as _io
     from ts_data_pipeline_spark.operators import fsio, similarity
 
-    emb = _io.load(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = io.load(spark, SF_DIR, "embeddings")
     uri = "file://" + str(tmp_path / "uri_pfx")
     d_prefix, dim = 8, 64
     similarity.prefix_index_write(
-        emb, uri, d_prefix,
-        basis=(
-            [[1.0 if j == i else 0.0 for j in range(dim)]
-             for i in range(d_prefix)],
-            [0.0] * dim,
-        ),
+        emb, uri, d_prefix, basis=identity_basis(d_prefix, dim)
     )
     assert fsio.exists(spark, uri + "/_pca_basis.json")
     assert fsio.exists(spark, uri + "/_prefix_meta.json")
-    got = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.prefix_query_index(
+    got = assert_twin_rows(
+        similarity.prefix_query_index(
             spark, uri, emb, [0, 1], k=5, rerank_factor=4
-        ).collect()
+        ),
+        oracle,
+        similarity.prefix_dim_topk_sql([0, 1], d_prefix, k=5, rerank_factor=4),
     )
-    inline = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.prefix_dim_topk(
-            emb, [0, 1], d_prefix, k=5, rerank_factor=4
-        ).collect()
-    )
-    assert got == inline and len(got) == 10
+    assert len(got) == 10
 
 
 def test_bsign_maintenance_decision_rewiden_rule(spark, tmp_path):
@@ -2729,7 +2735,9 @@ def test_html_main_content_drops_link_walls_keeps_prose(spark):
     assert out[2].link_chars == 0
 
 
-def test_prefix_and_bsign_filtered_search_semantics(spark, tmp_path):
+def test_prefix_and_bsign_filtered_search_semantics(
+    spark, tmp_path, prefix16_index, bsign64_index
+):
     """r12 filtered-search contract on the persisted narrow-relation
     legs (the bsign leg is additionally hash-gated in
     ann_lsh_ivf_topk): (1) no filtered-out candidate ever surfaces;
@@ -2738,10 +2746,9 @@ def test_prefix_and_bsign_filtered_search_semantics(spark, tmp_path):
     querying an index whose candidate set IS the filtered corpus
     (filter includes the query rows, so the two constructions
     coincide exactly)."""
-    from ts_data_pipeline_spark import io as _io
     from ts_data_pipeline_spark.operators import similarity
 
-    emb = _io.load(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = io.load(spark, SF_DIR, "embeddings")
     qids = [0, 1, 2]
     allow = emb.filter("vec_id % 3 = 0 OR vec_id IN (0, 1, 2)").select(
         "vec_id"
@@ -2749,15 +2756,9 @@ def test_prefix_and_bsign_filtered_search_semantics(spark, tmp_path):
     allowed = {r.vec_id for r in allow.collect()}
 
     d_prefix, dim = 16, 64
-    ident = (
-        [[1.0 if j == i else 0.0 for j in range(dim)]
-         for i in range(d_prefix)],
-        [0.0] * dim,
-    )
-    ppath = str(tmp_path / "pfx")
-    similarity.prefix_index_write(emb, ppath, d_prefix, basis=ident)
     got = similarity.prefix_query_index(
-        spark, ppath, emb, qids, k=5, rerank_factor=4, filter_ids=allow
+        spark, prefix16_index, emb, qids, k=5, rerank_factor=4,
+        filter_ids=allow,
     ).collect()
     assert all(r.cand_id in allowed for r in got)
     assert sorted(
@@ -2767,7 +2768,7 @@ def test_prefix_and_bsign_filtered_search_semantics(spark, tmp_path):
     ppath2 = str(tmp_path / "pfx2")
     similarity.prefix_index_write(
         emb.join(allow, "vec_id", "left_semi"), ppath2, d_prefix,
-        basis=ident,
+        basis=identity_basis(d_prefix, dim),
     )
     want = similarity.prefix_query_index(
         spark, ppath2, emb, qids, k=5, rerank_factor=4
@@ -2777,10 +2778,9 @@ def test_prefix_and_bsign_filtered_search_semantics(spark, tmp_path):
     )
     assert key(got) == key(want)
 
-    bpath = str(tmp_path / "bsig")
-    similarity.bsign_index_write(emb, bpath, dim)
     bgot = similarity.bsign_query_index(
-        spark, bpath, emb, qids, k=5, rerank_factor=4, filter_ids=allow
+        spark, bsign64_index, emb, qids, k=5, rerank_factor=4,
+        filter_ids=allow,
     ).collect()
     assert all(r.cand_id in allowed for r in bgot)
     bpath2 = str(tmp_path / "bsig2")
@@ -2806,10 +2806,6 @@ def test_bsign_plane_pair_ids_validated_loudly(spark):
 
     emb = _io.load(spark, "/root/testdata/sf0.001", "embeddings")
     bad = [(0, 10**9)]  # second id not in the corpus
-    with _pytest.raises(ValueError, match="plane-pair"):
-        similarity.binary_sign_topk(
-            emb, [0, 1], 64, k=3, plane_pairs=bad
-        )
     with _pytest.raises(ValueError, match="plane-pair"):
         similarity.bsign_index_write(
             emb, "/tmp/never_written_bsign", 64, plane_pairs=bad

@@ -16,7 +16,7 @@ import io as pyio
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, assert_twin_rows
 from ts_data_pipeline_spark import io
 from ts_data_pipeline_spark.plans.queryspec import (
     GroupByTime,
@@ -632,15 +632,16 @@ def test_clustered_corpus_ivf_pruning_loses_no_recall(spark, tmp_path):
     assert r_pruned >= 0.8
 
 
-def test_bsign_index_coarse_scan_bytes_are_signature_sized(spark, tmp_path):
+def test_bsign_index_coarse_scan_bytes_are_signature_sized(
+    spark, oracle, tmp_path
+):
     """The persisted 1-bit signature relation makes the sign-
     quantized coarse pass cheap IN BYTES, measured: the query's scan
     of the signature table reads exactly that table's file bytes, a
     small fraction of the float-vector relation it replaces (2 bigint
     words vs 64 floats per row here), and the index query's answers
-    are bit-identical to the inline on-the-fly form (same packing,
-    same tie-breaks — so the registered gate's DuckDB twin covers
-    this path's semantics)."""
+    equal the DuckDB twin binary_sign_topk_sql (same packing, same
+    tie-breaks)."""
     import os
 
     from ts_data_pipeline_spark.operators import similarity
@@ -658,24 +659,21 @@ def test_bsign_index_coarse_scan_bytes_are_signature_sized(spark, tmp_path):
     meta = similarity.bsign_index_write(emb, path, EMBEDDING_DIM)
     assert meta["n_words"] == 2
 
-    inline = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.binary_sign_topk(
-            emb, ANN_QUERY_IDS, EMBEDDING_DIM, k=5, rerank_factor=8
-        ).collect()
-    )
-    from_index = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.bsign_query_index(
+    def query():
+        return similarity.bsign_query_index(
             spark, path, emb, ANN_QUERY_IDS, k=5, rerank_factor=8
-        ).collect()
+        )
+
+    assert assert_twin_rows(
+        query(),
+        oracle,
+        similarity.binary_sign_topk_sql(
+            ANN_QUERY_IDS, EMBEDDING_DIM, k=5, rerank_factor=8
+        ),
     )
-    assert from_index == inline and len(inline) > 0
 
     sig_dir = os.path.join(path, "signatures")
-    df = similarity.bsign_query_index(
-        spark, path, emb, ANN_QUERY_IDS, k=5, rerank_factor=8
-    )
+    df = query()
     m = scan_metrics(df, path_contains=sig_dir)
     sig_bytes = dir_bytes(sig_dir)
     assert m["bytes_read"] == sig_bytes > 0
@@ -689,12 +687,13 @@ def test_bsign_index_coarse_scan_bytes_are_signature_sized(spark, tmp_path):
     assert sig_bytes < 0.35 * emb_bytes, (sig_bytes, emb_bytes)
 
 
-def test_prefix_index_query_matches_inline_and_reads_prefix_bytes(
-    spark, tmp_path
+def test_prefix_index_query_matches_twin_and_reads_prefix_bytes(
+    spark, oracle, tmp_path
 ):
-    """Stored rotated-prefix index (projection AT REST): answers are
-    bit-identical to pca_prefix_topk under the same persisted basis,
-    and the coarse pass physically reads exactly the narrow prefix
+    """Stored rotated-prefix index (projection AT REST) under the
+    power-iteration PCA basis: answers equal the DuckDB twin
+    pca_power_prefix_topk_sql, which fits the same basis in SQL, and
+    the coarse pass physically reads exactly the narrow prefix
     table's bytes (scanned ONCE — query rows re-literalized), a small
     fraction of the float-vector relation — closing the measured
     query-cost gap the r9 bench published for the on-the-fly
@@ -709,39 +708,33 @@ def test_prefix_index_query_matches_inline_and_reads_prefix_bytes(
     from ts_data_pipeline_spark.queries.llmdata import (
         ANN_QUERY_IDS,
         EMBEDDING_DIM,
+        PCA_POWER_ITERS,
     )
 
     emb = io.load(spark, SF_DIR, "embeddings")
-    comps, vals, mu = linalg.pca_components(
-        emb, "embedding", EMBEDDING_DIM, k=16
+    comps, mu = linalg.pca_power_basis(
+        emb, "embedding", EMBEDDING_DIM, k=16, n_iter=PCA_POWER_ITERS
     )
-    bpath = str(tmp_path / "basis.json")
-    linalg.pca_basis_write(bpath, comps, vals, mu)
     path = str(tmp_path / "prefidx")
-    meta = similarity.prefix_index_write(
-        emb, path, 16, basis_path=bpath
-    )
+    meta = similarity.prefix_index_write(emb, path, 16, basis=(comps, mu))
     assert meta["d_prefix"] == 16
 
-    inline = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.pca_prefix_topk(
-            emb, ANN_QUERY_IDS, 16, k=5, rerank_factor=16,
-            basis_path=bpath,
-        ).collect()
-    )
-    stored = sorted(
-        (r.query_id, r.cand_id, r.cos_sim, r.rank)
-        for r in similarity.prefix_query_index(
+    def query():
+        return similarity.prefix_query_index(
             spark, path, emb, ANN_QUERY_IDS, k=5, rerank_factor=16
-        ).collect()
+        )
+
+    assert assert_twin_rows(
+        query(),
+        oracle,
+        similarity.pca_power_prefix_topk_sql(
+            ANN_QUERY_IDS, EMBEDDING_DIM, 16, n_iter=PCA_POWER_ITERS,
+            k=5, rerank_factor=16,
+        ),
     )
-    assert stored == inline and len(stored) > 0
 
     pref_dir = os.path.join(path, "prefix")
-    df = similarity.prefix_query_index(
-        spark, path, emb, ANN_QUERY_IDS, k=5, rerank_factor=16
-    )
+    df = query()
     m = scan_metrics(df, path_contains=pref_dir)
     pref_bytes = dir_bytes(pref_dir)
     assert m["bytes_read"] == pref_bytes > 0

@@ -1793,6 +1793,29 @@ def test_replay_gate_applies_checkpoint_manager_and_unsets_it_after(
     assert seen == [(CHECKPOINT_FILE_MANAGER, rules[width_key])] * 2
 
 
+def test_replay_gate_removes_its_dir_when_the_run_raises(spark):
+    """A replay gate whose stream fails re-raises the error and still
+    removes its replay dir (chunks and checkpoint) from the temp dir."""
+    import glob
+    import tempfile
+    import uuid
+
+    from ts_data_pipeline_spark.queries import streaming as qs
+
+    prefix = f"t_gate_boom_{uuid.uuid4().hex[:8]}_"
+    df = spark.createDataFrame(
+        [_trade("A", "2024-01-01 10:00:10"), _trade("B", "2024-01-01 10:05:00")],
+        TRADE_SCHEMA,
+    )
+
+    def build(stream):
+        return stream.select("osym", F.expr("raise_error('boom')").alias("x"))
+
+    with pytest.raises(Exception, match="boom"):
+        qs._run_replay_gate(spark, df, prefix, build, n_chunks=2)
+    assert glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*")) == []
+
+
 def test_checkpoint_commits_keep_their_checksums(spark, tmp_path):
     """The FileSystem checkpoint manager drops no integrity check: every
     state delta keeps Spark's checkpoint checksum (``N.delta.crc``) and

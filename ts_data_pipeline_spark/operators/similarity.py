@@ -17,7 +17,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -151,178 +150,16 @@ SELECT query_id, cand_id, cos_sim, rank FROM ranked WHERE rank <= {k}
 """
 
 
-def prefix_dim_topk(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    d_prefix: int,
-    k: int = 5,
-    rerank_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Matryoshka-style truncated-dimension ANN (Kusupati et al.
-    2022, "Matryoshka Representation Learning"): candidates are
-    ranked by cosine over only the FIRST ``d_prefix`` dimensions —
-    d_prefix/d of the full scan's flops and, with the prefix stored
-    as its own column, d_prefix/d of its bytes — then the
-    rerank_factor*k shortlist re-ranks on the full vector.
-
-    With MRL-trained embeddings the prefix is a faithful coarse
-    scorer by construction; on generic embeddings it is a lossy
-    projection whose recall the bench publishes (the honest caveat).
-    Scale shape: identical to brute force (queries broadcast, no
-    corpus shuffle) with the candidate relation narrowed to the
-    prefix; the rerank joins raw vectors only for the query-bounded
-    shortlist (same tail as the PQ family — one definition).
-    Determinism: ROUND(cos, 6) + ascending-id tie-break, mirrored in
-    :func:`prefix_dim_topk_sql`.
-    """
-    emb = embeddings.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    pref = emb.select(id_col, F.slice("v", 1, d_prefix).alias("p"))
-    cands = _prefix_shortlist(pref, query_ids, k, rerank_factor, id_col)
-    return _pq_exact_rerank(embeddings, cands, query_ids, k, id_col, vec_col)
-
-
-def _prefix_shortlist(
-    pref: DataFrame,
-    query_ids: list[int],
-    k: int,
-    rerank_factor: int,
-    id_col: str,
-) -> DataFrame:
-    """Coarse-scorer shortlist shared by the raw-prefix and
-    PCA-rotated-prefix paths: cosine over the (id, p) low-dim
-    relation, rerank_factor*k survivors per query. Zero-norm rows
-    are guarded out on BOTH sides (a projected mean row is exactly
-    zero under centering)."""
-    q = pref.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col("p").alias("qp"),
-        F.sqrt(dot(F.col("p"), F.col("p"))).alias("qn"),
-    ).filter(F.col("qn") > 0)
-    c = pref.select(
-        F.col(id_col).alias("cand_id"),
-        F.col("p").alias("cp"),
-        F.sqrt(dot(F.col("p"), F.col("p"))).alias("cn"),
-    ).filter(F.col("cn") > 0)
-    return _prefix_shortlist_from(q, c, k, rerank_factor)
-
-
-def _prefix_shortlist_from(
-    q: DataFrame, c: DataFrame, k: int, rerank_factor: int
-) -> DataFrame:
-    """The scoring core behind :func:`_prefix_shortlist`, split out
-    so the stored-prefix index path can feed a RE-LITERALIZED query
-    relation (one scan of the stored prefix table instead of two).
-    ``q`` = (query_id, qp, qn), ``c`` = (cand_id, cp, cn), both
-    zero-norm-guarded by the caller."""
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(
-                dot(F.col("qp"), F.col("cp")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("psim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("psim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("prk", F.row_number().over(w))
-        .filter(F.col("prk") <= rerank_factor * k)
-        .select("query_id", "cand_id")
-    )
-
-
-def pca_prefix_topk(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    d_prefix: int,
-    k: int = 5,
-    rerank_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    basis: tuple[list[list[float]], list[float]] | None = None,
-    basis_path: str | None = None,
-) -> DataFrame:
-    """PCA-ROTATED Matryoshka prefix (VERDICT r8 #5): learn the
-    top-``d_prefix`` principal basis of the corpus (the one-pass
-    moment fit of ``operators/linalg.py::pca_components`` — Gram +
-    mean in a single dimension-bounded aggregate, eigh on the driver
-    over a d x d matrix), coarse-score in THAT basis, exact-rerank
-    the shortlist on the full vector.
-
-    Why: a raw d_prefix-dim slice assumes MRL-trained nested
-    embeddings; on generic embeddings the energy is spread across
-    all coordinates and the untrained prefix is a weak scorer
-    (published r8: recall@10 0.35 at d=16). The PCA basis is the
-    best d_prefix-dim linear approximation of the cloud in the
-    L2 sense, so rotating before truncation recovers most of the
-    recall at the same coarse-scan cost (the projection is a
-    literal-matrix column expression — no UDF, no shuffle, and at
-    rest the projected prefix can be stored as its own narrow
-    column exactly like the raw slice).
-
-    Not hash-gated: the rotation is an eigendecomposition (not
-    SQL-expressible); recall vs exact brute force is published by
-    bench and pinned by pytest, the same treatment as the HLL
-    sketches. The raw-slice form stays the registered gate.
-
-    ``basis`` (components, mean) reuses a basis fit once elsewhere —
-    train-once/query-many, the same convention as the PQ family's
-    ``codebook`` parameter (the top-16 basis is the first 16 rows of
-    the top-32 one, so one k=32 fit serves both published prefixes).
-    ``basis_path`` loads a PERSISTED basis sidecar
-    (``linalg.pca_basis_write``, stored beside the vector index) —
-    JSON float round-tripping is exact, so results are bit-identical
-    to the in-memory basis (pinned by pytest).
-    """
-    from ts_data_pipeline_spark.operators import linalg
-
-    if basis_path is not None:
-        if basis is not None:
-            raise ValueError("pass basis OR basis_path, not both")
-        comps_all, _vals, mu_all = linalg.pca_basis_read(basis_path)
-        basis = (comps_all, mu_all)
-    if basis is not None:
-        comps, mu = basis
-        comps = comps[:d_prefix]
-        if len(comps) < d_prefix:
-            raise ValueError(
-                f"basis has {len(comps)} components < d_prefix={d_prefix}"
-            )
-    else:
-        if dim is None:
-            # derive the width from the data (one bounded first-row
-            # action) instead of defaulting to 64 — any other
-            # dimensionality would silently fit/project against the
-            # wrong width (r9 advisor finding)
-            row = embeddings.select(F.size(vec_col).alias("d")).first()
-            if row is None:
-                raise ValueError("pca_prefix_topk: empty embeddings")
-            dim = int(row["d"])
-        comps, _vals, mu = linalg.pca_components(
-            embeddings, vec_col, dim, k=d_prefix
-        )
-    pref = linalg.pca_project_array(embeddings, comps, mu, vec_col, id_col)
-    cands = _prefix_shortlist(pref, query_ids, k, rerank_factor, id_col)
-    return _pq_exact_rerank(embeddings, cands, query_ids, k, id_col, vec_col)
-
-
 def prefix_dim_topk_sql(
     query_ids: list[int],
     d_prefix: int,
     k: int = 5,
     rerank_factor: int = 4,
 ) -> str:
-    """DuckDB twin of :func:`prefix_dim_topk` — same slice, rounding,
-    tie-breaks, zero-norm guards, and exact-rerank tail."""
+    """DuckDB twin of the raw-slice prefix search —
+    :func:`prefix_index_write` under the identity basis, then
+    :func:`prefix_query_index`: same slice, rounding, tie-breaks,
+    zero-norm guards, and exact-rerank tail."""
     qs = ", ".join(str(i) for i in query_ids)
     shortlist = rerank_factor * k
     return f"""
@@ -629,76 +466,6 @@ def _bsign_signatures(
     )
 
 
-def binary_sign_topk(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    dim: int,
-    k: int = 5,
-    rerank_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    plane_pairs: list[tuple[int, int]] | None = None,
-) -> DataFrame:
-    """1-bit (sign) quantized ANN: each vector compresses to its
-    coordinate sign bits (dim bits — 64x smaller than float32, 256
-    bits/vector at d=256), candidates are shortlisted by HAMMING
-    distance to the query signature (popcount over XOR — the
-    cheapest comparison in the whole quantization family, no
-    codebook, no training), then the rerank_factor*k survivors
-    re-rank on exact cosine. The sign bits are the axis-aligned
-    special case of hyperplane LSH (Charikar 2002, "Similarity
-    estimation techniques from rounding algorithms":
-    P[bit differs] = angle/pi per coordinate hyperplane), so
-    expected hamming is monotone in angular distance.
-
-    Scale shape: identical to the PQ flat scan — the coarse pass
-    reads only the packed signature column (dim/8 bytes vs 4*dim;
-    at rest it is its own narrow column exactly like the PQ codes
-    relation), queries broadcast, no corpus shuffle, and the XOR+
-    popcount pipeline is pure integer whole-stage-codegen arithmetic
-    (measurably cheaper per candidate than the float dot of the MRL
-    prefix at the same shortlist size). Determinism: sign is exact
-    on the stored values (no float-rounding hazard), hamming ties
-    break by ascending cand_id, the exact tail is the shared
-    :func:`_pq_exact_rerank`. Twin: :func:`binary_sign_topk_sql`.
-
-    ``plane_pairs`` appends hyperplane-sign bits beyond the dim
-    axis bits — the corpus-size scaling knob (:func:`bsign_bits_rule`
-    / the r10 recall cliff); the pairs must match the twin's.
-    """
-    if plane_pairs:
-        # loud failure for absent pair ids (see bsign_index_write)
-        _check_ids_present(
-            embeddings,
-            sorted({i for p in plane_pairs for i in p}),
-            id_col,
-            "bsign plane-pair",
-        )
-    sig = _bsign_signatures(embeddings, dim, plane_pairs, id_col, vec_col)
-    q = sig.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("s").alias("qs")
-    )
-    c = sig.select(F.col(id_col).alias("cand_id"), F.col("s").alias("cs"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            _hamming(F.col("qs"), F.col("cs")).alias("hamm"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamm").asc(), F.col("cand_id").asc()
-    )
-    cands = (
-        scored.withColumn("hrk", F.row_number().over(w))
-        .filter(F.col("hrk") <= rerank_factor * k)
-        .select("query_id", "cand_id")
-    )
-    return _pq_exact_rerank(embeddings, cands, query_ids, k, id_col, vec_col)
-
-
 def binary_sign_topk_sql(
     query_ids: list[int],
     dim: int,
@@ -707,8 +474,9 @@ def binary_sign_topk_sql(
     plane_pairs: list[tuple[int, int]] | None = None,
     filter_pred: str | None = None,
 ) -> str:
-    """DuckDB twin of :func:`binary_sign_topk` — same 32-bit word
-    packing, hamming shortlist, tie-breaks, and exact-rerank tail.
+    """DuckDB twin of the 1-bit sign search (:func:`bsign_index_write`
+    + :func:`bsign_query_index`) — same 32-bit word packing, hamming
+    shortlist, tie-breaks, and exact-rerank tail.
     ``plane_pairs`` mirrors the hyperplane-bit extension: extra bit
     j = sign(dot(v, emb[a_j] - emb[b_j])), packed into further
     32-bit words appended after the axis words. ``filter_pred``
@@ -810,16 +578,22 @@ def prefix_index_write(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> dict:
-    """Persist the PCA-rotated prefix as its own narrow ``(id, p)``
-    relation — projection AT REST. ``pca_prefix_topk`` pays the
-    literal-matrix projection over the FULL vector column on every
-    query (the measured ~3x-the-raw-slice query cost); storing the
-    projected d_prefix-dim column once makes the coarse scan read
-    d_prefix/d of the bytes and do zero projection work per query —
-    the same store-the-derived-column move as the PQ codes and the
-    sign signatures. The basis sidecar is copied into the index so
-    the artifact is self-describing (appends project new rows under
-    the SAME pinned rotation, the pinned-frame contract)."""
+    """Persist a ``d_prefix``-dim prefix of every vector as its own
+    narrow ``(id, p)`` relation for Matryoshka-style truncated-
+    dimension ANN (Kusupati et al. 2022): :func:`prefix_query_index`
+    ranks by cosine over the stored prefix (d_prefix/d of the bytes,
+    no projection per query), then re-ranks the shortlist on the full
+    vector. The prefix is the first ``d_prefix`` rows of ``basis``
+    (components, mean) — the IDENTITY basis stores the raw slice
+    bit-exactly (twin :func:`prefix_dim_topk_sql`); a PCA basis,
+    fit once (the top-16 basis is the first 16 rows of the top-32
+    one), rotates first and recovers recall on generic embeddings
+    (twin :func:`pca_power_prefix_topk_sql` for
+    ``linalg.pca_power_basis``). ``basis_path`` loads a persisted
+    sidecar instead; JSON float round-tripping is exact, so both
+    spellings store bit-identical prefixes. The basis sidecar is
+    copied into the index so appends project under the SAME pinned
+    rotation (the pinned-frame contract)."""
     import json
 
     from ts_data_pipeline_spark.operators import linalg
@@ -867,12 +641,15 @@ def prefix_query_index(
     vec_col: str = "embedding",
     filter_ids: DataFrame | None = None,
 ) -> DataFrame:
-    """Query the persisted rotated-prefix relation: coarse cosine
-    over the STORED narrow ``(id, p)`` table (query rows
-    re-literalized — bounded collect — so the table is scanned once),
-    exact full-vector re-rank on the shortlist. Value-identical to
-    ``pca_prefix_topk`` under the same persisted basis (bit-exact
-    projection round-trip; pytest-pinned).
+    """Query the persisted prefix relation: coarse cosine over the
+    STORED narrow ``(id, p)`` table (query rows re-literalized —
+    bounded collect — so the table is scanned once; zero-norm rows
+    guarded out on both sides, since a projected mean row is exactly
+    zero under centering), exact full-vector re-rank on the
+    rerank_factor*k shortlist. Determinism: ROUND(cos, 6) +
+    ascending-id tie-breaks, mirrored in :func:`prefix_dim_topk_sql`
+    (identity basis) and :func:`pca_power_prefix_topk_sql` (power-
+    iteration basis); both pinned against the index in pytest.
 
     ``filter_ids`` mirrors ``ivfpq_query_index(filter_ids=...)``
     (r12): candidate pre-filter semi-joined onto the prefix scan
@@ -901,7 +678,25 @@ def prefix_query_index(
         F.col("p").alias("cp"),
         F.sqrt(dot(F.col("p"), F.col("p"))).alias("cn"),
     ).filter(F.col("cn") > 0)
-    cands = _prefix_shortlist_from(q, c, k, rerank_factor)
+    scored = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("cand_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "cand_id",
+            F.round(
+                dot(F.col("qp"), F.col("cp")) / (F.col("qn") * F.col("cn")), 6
+            ).alias("psim"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("psim").desc(), F.col("cand_id").asc()
+    )
+    cands = (
+        scored.withColumn("prk", F.row_number().over(w))
+        .filter(F.col("prk") <= rerank_factor * k)
+        .select("query_id", "cand_id")
+    )
     return _pq_exact_rerank(embeddings, cands, query_ids, k, id_col, vec_col)
 
 
@@ -913,19 +708,15 @@ def bsign_index_write(
     vec_col: str = "embedding",
     plane_pairs: list[tuple[int, int]] | None = None,
 ) -> dict:
-    """Persist the 1-bit signature relation as its own narrow table
-    (``(id, s)`` — ceil(dim/32) bigint words per row, ~dim/8 bytes vs
-    4*dim for the float vectors), the at-rest layout that makes the
-    sign-quantized coarse scan CHEAP IN BYTES, not just in flops:
-    :func:`binary_sign_topk` computes signatures on the fly and so
-    still scans the full vector column; the index variant scans only
-    this relation (measured in tests via plans/scanmetrics —
-    the same plan-vs-measured upgrade the IVF cell pruning got in
-    round 9). No training, no codebooks: the 'index build' is one
-    narrow projection, and append = write more rows (signatures are
-    row-independent under the PINNED plane pairs recorded in the
-    meta sidecar — the same pinned-frame contract as the PQ
-    codebooks).
+    """1-bit (sign) quantized ANN, build side: each vector's
+    coordinate sign bits (sign-LSH on the axis hyperplanes, Charikar
+    2002 — expected hamming is monotone in angle) stored as a narrow
+    ``(id, s)`` table, ceil(dim/32) bigint words per row (~dim/8
+    bytes vs 4*dim for the floats). :func:`bsign_query_index` scans
+    only this relation for its hamming shortlist (bytes measured in
+    tests via plans/scanmetrics), then re-ranks on exact cosine. No
+    training: append = write more rows, signed under the PINNED plane
+    pairs in the meta sidecar. Twin: :func:`binary_sign_topk_sql`.
 
     ``plane_pairs`` appends hyperplane-sign bits beyond the dim axis
     bits — pass :func:`bsign_plane_pairs` sized by
@@ -1070,10 +861,12 @@ def bsign_query_index(
     """Query the persisted sign-signature relation: hamming shortlist
     over the STORED (id, s) table — the coarse pass never touches the
     float vectors — then the shared exact re-rank joins raw vectors
-    for the query-bounded shortlist only. Value-identical to
-    :func:`binary_sign_topk` (same packing, same tie-breaks;
-    pytest-pinned), so the registered gate's DuckDB twin covers this
-    path's semantics too.
+    for the query-bounded shortlist only. Sign is exact on the stored
+    values (no float-rounding hazard); hamming ties break by ascending
+    cand_id. Value-identical to the DuckDB twin
+    :func:`binary_sign_topk_sql` (same packing, same tie-breaks;
+    hash-gated in ``ann_lsh_ivf_topk`` and pytest-pinned with
+    hyperplane bits).
 
     ``filter_ids`` (single-column DataFrame of allowed candidate
     ids) mirrors ``ivfpq_query_index(filter_ids=...)`` — r12, so
@@ -1508,7 +1301,7 @@ def _norm3(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
 def _cell_ranked(norm: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
     """(id, ccid, cc, crk): every vector's centroids ranked by
     ROUND(cosine, 6) desc / ccid asc — THE single ranking body behind
-    inline assignment (:func:`_ivf_assign`), index build, and
+    IVF-flat assignment (:func:`_ivf_assign`), index build, and
     index-time query probing, so no pair of consumers can ever place
     a vector in different cells."""
     paired = (
@@ -1536,7 +1329,7 @@ def _coarse_cents(
 ) -> DataFrame:
     """The (ccid, cv, cn) coarse-centroid relation: spherical-k-means
     trained when ``coarse_train_iters`` > 0, else the raw corpus
-    rows — shared by inline search and index build."""
+    rows — shared by IVF-flat assignment and index build."""
     if coarse_train_iters > 0:
         return _kmeans_centroids(
             embeddings, centroid_ids, coarse_train_iters, id_col, vec_col,
@@ -1657,13 +1450,14 @@ def _ivf_assign(
     coarse_train_iters: int = 0,
     dim: int = 64,
 ):
-    """THE coarse-assignment lane, shared by ivf_topk and
-    ivfpq_topk: returns (norm, assign, probe) where norm is
-    (id, v, n), assign is (id, cell) and probe is (p_qid, qcell).
-    Assignment cosine is ROUND(.., 6) with ascending-cid tie-break —
-    the k-means convention — so the flat and the PQ-composed search
-    can never place a vector in different cells (the drift the first
-    cut of ivfpq shipped with). ``coarse_train_iters`` > 0 swaps the
+    """THE coarse-assignment lane of ivf_topk: returns (norm,
+    assign, probe) where norm is (id, v, n), assign is (id, cell) and
+    probe is (p_qid, qcell). Assignment cosine is ROUND(.., 6) with
+    ascending-cid tie-break — the k-means convention, via
+    :func:`_cell_ranked`, the lane the IVFPQ index build and query
+    probing also use — so IVF-flat and IVFPQ can never place a vector
+    in different cells (the drift the first cut of ivfpq shipped
+    with). ``coarse_train_iters`` > 0 swaps the
     raw corpus-row centroids for spherical-k-means-trained ones
     (:func:`_kmeans_centroids`; cell labels stay the seed ids)."""
     norm = _norm3(embeddings, id_col, vec_col)
@@ -2497,87 +2291,6 @@ SELECT query_id, cand_id, cos_sim, rank FROM (
 """
 
 
-def brute_force_topk_pandas(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k via an Arrow-batched pandas UDF (numpy
-    matmul per batch) — the vectorized ESCAPE-HATCH twin of
-    :func:`brute_force_topk`.
-
-    Exists to measure, not to replace: the expression path keeps the
-    whole scan in JVM codegen; this path pays Arrow serialization
-    both ways but scores each batch as ONE numpy (batch x dim) @
-    (dim x queries) matmul. bench.py's extras time both at sf0.1 so
-    the "UDFs are the slow path / Arrow batching is the acceptable
-    escape hatch" guidance is a measured number. Result values are
-    pinned identical to the expression path (tests/test_llmdata.py);
-    per-query top-k still runs JVM-side.
-
-    Queries ride into the workers as a broadcast numpy matrix via
-    closure capture — no shuffle of the corpus, same as the
-    expression path.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    q_rows = (
-        embeddings.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-        .collect()
-    )  # |queries| rows — driver-side by design, like any broadcast dim
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    Q = np.stack([np.asarray(r["v"], dtype=np.float64) for r in q_rows])
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-
-    @pandas_udf("array<double>")
-    def cos_scores(vs: pd.Series) -> pd.Series:
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-        S = Mn @ Qn.T  # (batch, queries)
-        # HALF_UP (away from zero) to match the expression path's
-        # F.round / BigDecimal semantics — np.round is banker's
-        # half-to-even and can diverge on cosines landing exactly on
-        # a 6-dp half. (Residual caveat: this is float half-up; a
-        # value whose *binary* representation sits across the decimal
-        # .5 boundary could still differ from exact-decimal rounding
-        # — none occur in the pinned comparisons.)
-        S6 = np.sign(S) * np.floor(np.abs(S) * 1e6 + 0.5) / 1e6
-        return pd.Series(list(S6))
-
-    scored = (
-        embeddings.select(
-            F.col(id_col).alias("cand_id"),
-            cos_scores(F.col(vec_col).cast("array<double>")).alias("scores"),
-        )
-        .select(
-            "cand_id",
-            F.posexplode("scores").alias("qidx", "cos_sim"),
-        )
-        .join(
-            F.broadcast(
-                embeddings.sparkSession.createDataFrame(
-                    [(int(i), int(q)) for i, q in enumerate(q_ids)],
-                    "qidx int, query_id long",
-                )
-            ),
-            "qidx",
-        )
-        .filter(F.col("cand_id") != F.col("query_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (Jegou, Douze, Schmid 2011 — "Product
 # Quantization for Nearest Neighbor Search")
@@ -2668,9 +2381,9 @@ def _pq_cb_trained(
     justification as the bloom sketch's collect) — and every
     downstream consumer references it at least twice (enc + qtab), so
     leaving it lazy would recompute the whole Lloyd loop per
-    reference. Inline callers still re-train per query; the
-    production path is pq_build_index(train_iters=...) — train ONCE,
-    persist, and let every query hit the stored codebook.
+    reference. Its callers are the index builds
+    (pq_build_index / ivfpq_build_index with ``train_iters``): train
+    ONCE, persist, and let every query hit the stored codebook.
     """
     cb = _pq_cb(embeddings, codebook_ids, m, dsub, id_col, vec_col)
     base = _pq_base(embeddings, m, dsub, id_col, vec_col)
@@ -2707,7 +2420,8 @@ def _pq_enc_from(rows: DataFrame, cb: DataFrame, m: int, dsub: int,
     """Encode rows against a given codebook: (id, sub, code) with
     code = the nearest codebook member's cid (6-dp rounded REDUCED
     L2: cvv - 2ab, see :func:`_with_cvv`; cid tie-break). ONE
-    definition for inline search, index build, and index append."""
+    definition for index build, index append, and every Lloyd
+    round of :func:`_pq_cb_trained`."""
     return (
         _pq_base(rows, m, dsub, id_col, vec_col)
         .join(F.broadcast(_with_cvv(cb)), "sub")
@@ -2726,7 +2440,7 @@ def _pq_enc_from(rows: DataFrame, cb: DataFrame, m: int, dsub: int,
 def _pq_qtab(embeddings: DataFrame, query_ids: list[int], cb: DataFrame,
              m: int, dsub: int, id_col: str, vec_col: str) -> DataFrame:
     """Query ADC table (query_id, qsub, qcid, qd2) against a given
-    codebook — shared by inline and persisted-index search."""
+    codebook — shared by the flat and IVF index queries."""
     return (
         _pq_base(
             embeddings.filter(F.col(id_col).isin(query_ids)),
@@ -2754,8 +2468,8 @@ def _pq_adc_cands(scored: DataFrame, id_col: str,
                   shortlist: int) -> DataFrame:
     """The shared ADC aggregation + shortlist stage: rows carrying
     (query_id, id, qd2) -> (query_id, cand_id). One definition so a
-    rounding/tie-break tweak cannot desynchronize the three search
-    paths (inline PQ, IVFPQ, persisted index)."""
+    rounding/tie-break tweak cannot desynchronize the flat and the
+    IVF index queries."""
     approx = (
         scored.filter(F.col(id_col) != F.col("query_id"))
         .groupBy("query_id", id_col)
@@ -2771,37 +2485,6 @@ def _pq_adc_cands(scored: DataFrame, id_col: str,
     )
 
 
-def _pq_enc_qtab(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    codebook_ids: list[int],
-    m: int,
-    dsub: int,
-    id_col: str,
-    vec_col: str,
-    train_iters: int = 0,
-    codebook: DataFrame | None = None,
-):
-    """Shared PQ machinery: (enc, qtab) — the compressed corpus
-    relation (id, sub, code) and the query ADC table. Composition of
-    the single-definition helpers above. ``train_iters`` > 0 swaps
-    the sampled codebook for the k-means-trained one
-    (:func:`_pq_cb_trained`); pass ``codebook`` (sub, cid, cv) to
-    reuse an already-built one — e.g. so pq and ivfpq legs sharing
-    identical training parameters train ONCE instead of twice."""
-    if codebook is not None:
-        cb = codebook
-    elif train_iters > 0:
-        cb = _pq_cb_trained(
-            embeddings, codebook_ids, m, dsub, id_col, vec_col, train_iters
-        )
-    else:
-        cb = _pq_cb(embeddings, codebook_ids, m, dsub, id_col, vec_col)
-    enc = _pq_enc_from(embeddings, cb, m, dsub, id_col, vec_col)
-    qtab = _pq_qtab(embeddings, query_ids, cb, m, dsub, id_col, vec_col)
-    return enc, qtab
-
-
 def _pq_exact_rerank(
     embeddings: DataFrame,
     cands: DataFrame,
@@ -2811,7 +2494,7 @@ def _pq_exact_rerank(
     vec_col: str,
 ) -> DataFrame:
     """Exact-cosine re-rank of a (query_id, cand_id) shortlist —
-    shared tail of both PQ search paths."""
+    the shared tail of every index query (PQ, IVFPQ, prefix, sign)."""
     vecs = embeddings.selectExpr(
         f"`{id_col}`",
         f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS v",
@@ -2837,124 +2520,6 @@ def _pq_exact_rerank(
         .filter(F.col("rank") <= k)
         .select("query_id", "cand_id", "cos_sim", "rank")
     )
-
-
-def pq_topk(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    codebook_ids: list[int],
-    m: int = 8,
-    dsub: int = 8,
-    k: int = 5,
-    rerank_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_iters: int = 0,
-    codebook: DataFrame | None = None,
-) -> DataFrame:
-    """ANN via product quantization + exact re-rank: the standard
-    compressed-domain search for corpora whose raw vectors don't fit
-    hot storage (FAISS's IVFPQ building block).
-
-    The vector space is split into ``m`` subspaces of ``dsub`` dims;
-    each subspace gets its own codebook. With ``train_iters=0`` the
-    codebook is the deterministic subvectors of ``codebook_ids``
-    corpus rows (sampled codebooks, the training-free PQ variant);
-    ``train_iters>0`` runs per-subspace Lloyd's from those seeds
-    (:func:`_pq_cb_trained`) — the trained variant that lifted
-    measured recall@10 from 0.28 to 0.82 at the bench operating
-    point (ksub=32, rerank_factor=16). A vector encodes as m small
-    codes (m bytes at ksub <= 256 — 32x compression of a 64-dim
-    float32 vector); a query scans CODES, not vectors, via its ADC
-    table: approx ||q - x||^2 = sum_s qd2[s, code_s(x)].
-
-    Scale shape (100 TB):
-    - codebooks and ADC tables are m x |codebook| rows — broadcast-
-      sized BY CONSTRUCTION, independent of corpus size;
-    - encoding is one broadcast join + a min-struct aggregate (no
-      window over the corpus, no shuffle of the vectors themselves);
-    - the approximate scan carries (id, sub, code) rows — the
-      compressed relation — through one map-side-combined sum;
-    - only the rerank_factor*k shortlist rides a join back to the
-      raw vectors (broadcast of query x shortlist ids).
-    Determinism: every compared quantity is ROUND(.., 6) with
-    ascending-id tie-breaks, mirrored in :func:`pq_topk_sql`.
-    """
-    enc, qtab = _pq_enc_qtab(
-        embeddings, query_ids, codebook_ids, m, dsub, id_col, vec_col,
-        train_iters, codebook,
-    )
-    scored = enc.join(
-        F.broadcast(qtab),
-        (F.col("sub") == F.col("qsub")) & (F.col("code") == F.col("qcid")),
-    )
-    cands = _pq_adc_cands(scored, id_col, rerank_factor * k)
-    return _pq_exact_rerank(embeddings, cands, query_ids, k, id_col, vec_col)
-
-
-def ivfpq_topk(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    centroid_ids: list[int],
-    codebook_ids: list[int],
-    m: int = 8,
-    dsub: int = 8,
-    k: int = 5,
-    nprobe: int = 2,
-    rerank_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_iters: int = 0,
-    coarse_train_iters: int = 0,
-    codebook: DataFrame | None = None,
-) -> DataFrame:
-    """IVF + PQ composed — the actual FAISS IVFPQ shape: a coarse
-    quantizer restricts each query to ``nprobe`` cells, PQ's ADC
-    table scores only the CODES inside those cells, and the
-    shortlist re-ranks exactly.
-
-    This stacks the two independent cost reductions: IVF cuts the
-    candidate count to ~|corpus| * nprobe / |centroids|; PQ makes
-    each surviving candidate cost an m-term table lookup on an m-byte
-    code instead of a d-dim float scan. At 100 TB both matter — the
-    scan reads the codes table (32x smaller), and only the probed
-    fraction of it. All broadcast relations (centroids, codebooks,
-    ADC tables, probe pairs) are bounded by constructions independent
-    of corpus size; the one corpus-sized relation in flight is
-    (id, sub, code, cell).
-
-    ``train_iters`` trains the PQ codebooks (:func:`_pq_cb_trained`);
-    ``coarse_train_iters`` trains the coarse quantizer with spherical
-    k-means from the ``centroid_ids`` seeds (:func:`_kmeans_centroids`).
-    The recall ceiling of the COARSE stage is the binding constraint:
-    cell-recall can't exceed what the probed corpus fraction covers,
-    so the nlist/nprobe pair is the knob that sets it (bench publishes
-    the measured point: 8 trained cells, nprobe=4 -> 0.66 recall@10).
-    """
-    _, assign, probe = _ivf_assign(
-        embeddings, centroid_ids, query_ids, nprobe, id_col, vec_col,
-        coarse_train_iters, dim=m * dsub,
-    )
-
-    enc, qtab = _pq_enc_qtab(
-        embeddings, query_ids, codebook_ids, m, dsub, id_col, vec_col,
-        train_iters, codebook,
-    )
-    # cell-restricted candidate space: codes of vectors whose cell is
-    # probed by the query — the probe relation (queries x nprobe) is
-    # broadcast; the join fans each code row only to the queries that
-    # probe its cell
-    in_cells = enc.join(assign, id_col).join(
-        F.broadcast(probe), F.col("cell") == F.col("qcell")
-    )
-    scored = in_cells.join(
-        F.broadcast(qtab),
-        (F.col("sub") == F.col("qsub"))
-        & (F.col("code") == F.col("qcid"))
-        & (F.col("p_qid") == F.col("query_id")),
-    )
-    cands = _pq_adc_cands(scored, id_col, rerank_factor * k)
-    return _pq_exact_rerank(embeddings, cands, query_ids, k, id_col, vec_col)
 
 
 #: REDUCED comparison form (cvv - 2ab) — the same shape as
@@ -3008,7 +2573,8 @@ cb{i} AS (SELECT sub, cid, cv, list_dot_product(cv, cv) AS cvv FROM (
 def _pq_sql_prefix(query_ids: list[int], codebook_ids: list[int],
                    m: int, dsub: int, train_iters: int = 0) -> str:
     """Shared CTE prefix (emb/subs/cb/enc/qtab) for both PQ twins —
-    one definition, like :func:`_pq_enc_qtab` on the Spark side.
+    one definition, like :func:`_pq_enc_from` + :func:`_pq_qtab` on
+    the Spark side.
     ``train_iters`` > 0 unrolls the per-subspace Lloyd rounds of
     :func:`_pq_cb_trained` into one CTE chain per round (assign ->
     per-position mean -> reassemble with ROUND(mu, 6)), the same
@@ -3078,9 +2644,10 @@ def pq_topk_sql(
     rerank_factor: int = 4,
     train_iters: int = 0,
 ) -> str:
-    """DuckDB twin of :func:`pq_topk` — same slices, same expanded-
-    form distances, same 6-dp rounding and tie-breaks, same unrolled
-    Lloyd rounds when ``train_iters`` > 0."""
+    """DuckDB twin of the flat PQ index search
+    (:func:`pq_build_index` + :func:`pq_query_index`) — same slices,
+    same reduced-form distances, same 6-dp rounding and tie-breaks,
+    same unrolled Lloyd rounds when ``train_iters`` > 0."""
     return (
         _pq_sql_prefix(query_ids, codebook_ids, m, dsub, train_iters)
         + """,
@@ -3107,7 +2674,8 @@ def ivfpq_topk_sql(
     coarse_train_iters: int = 0,
     filter_pred: str | None = None,
 ) -> str:
-    """DuckDB twin of :func:`ivfpq_topk` — the PQ prefix plus the
+    """DuckDB twin of the IVFPQ index search (:func:`ivfpq_build_index`
+    + :func:`ivfpq_query_index`) — the PQ prefix plus the
     coarse-cell assignment/probe restriction; ``coarse_train_iters``
     unrolls the spherical-k-means rounds of :func:`_kmeans_centroids`
     (unit vectors, ROUND(cos, 6)/cell-asc winners, per-position mean,
@@ -3364,6 +2932,15 @@ def pq_build_index(
     vector (vs d float32s raw), the compression that makes the
     compressed-domain scan pay at 100 TB.
 
+    Product quantization (Jégou, Douze, Schmid 2011): ``m``
+    subspaces of ``dsub`` dims, one codebook each — the
+    ``codebook_ids`` rows' subvectors, or Lloyd-trained from them
+    when ``train_iters`` > 0 (:func:`_pq_cb_trained`; recall@10 0.28
+    -> 0.82 at the bench operating point). Queries score codes via an
+    ADC table and re-rank the shortlist exactly; every compared
+    quantity is ROUND(.., 6) with ascending-id tie-breaks, mirrored
+    in :func:`pq_topk_sql`.
+
     Layout: ``path/codes`` (id, codes array<smallint> ordered by
     subspace — DENSE 0..ksub-1 indexes into the sorted codebook-id
     list, NOT raw corpus ids, so smallint can never overflow however
@@ -3410,8 +2987,9 @@ def pq_query_index(
     """Search a persisted PQ index: the corpus is never re-encoded —
     the codes table unpacks (posexplode) straight into the ADC join.
     ``embeddings`` supplies only the query vectors and the exact
-    re-rank lookups. Value-identical to the inline :func:`pq_topk`
-    (pinned in tests/test_llmdata.py)."""
+    re-rank lookups. Value-identical to the DuckDB twin
+    :func:`pq_topk_sql` under the same build parameters (pinned in
+    tests/test_llmdata.py)."""
     import json
 
     meta = json.loads(
@@ -3833,6 +3411,11 @@ def ivfpq_build_index(
     subspace + spherical k-means for the coarse quantizer) runs ONCE
     here; queries read the stored relations.
 
+    IVF + PQ composed (the FAISS IVFPQ shape): a query reads
+    ~nprobe/nlist of the codes, and ``coarse_train_iters`` trains the
+    coarse cells by spherical k-means (:func:`_kmeans_centroids`).
+    The coarse stage caps recall, so nlist/nprobe is the knob.
+
     ``residual=True`` builds a true IVFADC index (Jégou et al. 2011):
     codebooks are trained on, and codes encode, each vector's
     UNIT-SPACE RESIDUAL against its assigned coarse centroid
@@ -3853,10 +3436,11 @@ def ivfpq_build_index(
     filter, so Spark prunes at the PARTITION level
     (``PartitionFilters`` — pinned in tests/test_llmdata.py) and the
     job reads ~nprobe/nlist of the compressed corpus instead of all
-    of it. Assignment uses the SAME rounded-cosine ranking lane as
-    the inline search (:func:`_cell_ranked`), so the persisted index
-    returns value-identical results to :func:`ivfpq_topk` under the
-    same training parameters.
+    of it. Assignment and query probing share one rounded-cosine
+    ranking lane (:func:`_cell_ranked`), so the persisted index
+    returns value-identical results to the DuckDB twin
+    :func:`ivfpq_topk_sql` (:func:`ivfpq_residual_topk_sql` when
+    residual) under the same training parameters.
 
     ``embeddings`` is scanned by two subtrees (encode + cell
     assignment) and must be a DETERMINISTIC relation (a stored table
@@ -3971,9 +3555,9 @@ def ivfpq_query_index(
     pruning: Catalyst pushes the IN-list to ``PartitionFilters`` and
     the scan lists only ``codes/cell=<probed>/`` directories. Every
     other stage (ADC table, shortlist, exact re-rank) is shared with
-    the flat index path, so results are value-identical to
-    :func:`ivfpq_topk` under the same training parameters (pinned in
-    tests/test_llmdata.py).
+    the flat index path, so results are value-identical to the
+    DuckDB twin :func:`ivfpq_topk_sql` under the same training
+    parameters (pinned in tests/test_llmdata.py).
 
     ``filter_ids`` (a single-column DataFrame of allowed candidate
     ids) composes attribute PRE-filtering with the cell pruning: the

@@ -757,10 +757,9 @@ def ann_lsh_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # index — the deployment shape (VERDICT r7 ask #4): ONE build
     # (Lloyd codebooks + spherical-k-means coarse cells + encode +
     # cell-partitioned write) serves both the flat-PQ and the
-    # cell-pruned IVFPQ query. The inline retrain-per-call forms stay
-    # as bench extras only. Values are identical to the inline lanes
-    # (shared encode/assign/ADC definitions; pinned in
-    # tests/test_llmdata.py), so the oracle twins are unchanged.
+    # cell-pruned IVFPQ query. The index is the only Spark spelling
+    # of PQ/IVFPQ; its values equal the DuckDB twins pq_topk_sql /
+    # ivfpq_topk_sql (pinned in tests/test_llmdata.py).
     idx_path = _ann_index_path(spark, sf_dir)
     pq = similarity.pq_query_index(
         spark, idx_path, io.load(spark, sf_dir, "embeddings"),

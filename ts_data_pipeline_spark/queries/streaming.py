@@ -153,20 +153,17 @@ FROM events
 """
 
 
-def _replay_chunks(
-    df: DataFrame, prefix: str, n_chunks: int = 4
-) -> tuple[str, str]:
+def _replay_chunks(df: DataFrame, base: str, n_chunks: int = 4) -> str:
     """THE micro-batch replay convention, shared by every streaming
-    gate: write ``df`` as ``n_chunks`` time-ordered single-file
-    parquet chunks (sequential writes -> mtime order ->
+    gate: write ``df`` under ``base`` as ``n_chunks`` time-ordered
+    single-file parquet chunks (sequential writes -> mtime order ->
     FileStreamSource replays oldest-first, so the watermark advances
-    batch-over-batch like a live feed). Returns (base, data_dir).
+    batch-over-batch like a live feed). Returns the data dir.
 
     The ntile-chunked relation is materialized ONCE (eager
     localCheckpoint): the chunk assignment is a single-partition
     global sort, and filtering it per chunk without pinning would
     re-run that sort n_chunks times (r7 review finding)."""
-    base = tempfile.mkdtemp(prefix=prefix)
     data_dir = os.path.join(base, "data")
     chunks = df.withColumn(
         "chunk", F.ntile(n_chunks).over(Window.orderBy("ts"))
@@ -175,7 +172,7 @@ def _replay_chunks(
         chunks.filter(F.col("chunk") == i).drop("chunk").coalesce(1).write.mode(
             "append"
         ).parquet(data_dir)
-    return base, data_dir
+    return data_dir
 
 
 def _run_replay_gate(
@@ -187,16 +184,22 @@ def _run_replay_gate(
 ) -> DataFrame:
     """The full lifecycle every replay gate shares: chunked replay
     dir -> ``build(stream)`` streaming plan -> availableNow run into
-    a memory sink -> replay dir REMOVED -> the finals table. Cleanup
-    lives here so a future gate cannot forget it (six gates each
-    carried their own copy — r7 review finding)."""
-    base, data_dir = _replay_chunks(df, prefix, n_chunks)
-    stream = windowed.parquet_stream(spark, data_dir, df.schema, max_files=1)
-    out = build(stream)
-    name = f"{prefix}{uuid.uuid4().hex[:8]}"
-    with _session_rules(spark):
-        windowed.run_available_now(out, name, os.path.join(base, "ckpt"))
-    shutil.rmtree(base, ignore_errors=True)
+    a memory sink -> the finals table. The replay dir (chunks and
+    checkpoint) is removed whether the run succeeds or raises.
+    Cleanup lives here so a future gate cannot forget it (six gates
+    each carried their own copy — r7 review finding)."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    try:
+        data_dir = _replay_chunks(df, base, n_chunks)
+        stream = windowed.parquet_stream(
+            spark, data_dir, df.schema, max_files=1
+        )
+        out = build(stream)
+        name = f"{prefix}{uuid.uuid4().hex[:8]}"
+        with _session_rules(spark):
+            windowed.run_available_now(out, name, os.path.join(base, "ckpt"))
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
     return spark.table(name)
 
 
